@@ -1,6 +1,7 @@
 package graft.cells
 
 import graft.geom.{Extent, Geom}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 
 /** Uniform `nx × ny` grid over an extent — the engine's deterministic cell
   * index (the planar analogue of an H3/S2 cell scheme). Every MBR is
@@ -18,7 +19,7 @@ import graft.geom.{Extent, Geom}
   * i.e. half-open cells with the top/right global edge closed via clamping —
   * exactly-once *by construction*.
   */
-final case class CellScheme(extent: Extent, nx: Int, ny: Int) {
+final case class CellScheme(extent: Extent, nx: Int, ny: Int) extends KeyScheme {
   require(nx > 0 && ny > 0, s"grid must be positive, got ${nx}x$ny")
 
   // degenerate extents (all points on a line) get unit cells: everything
@@ -41,19 +42,33 @@ final case class CellScheme(extent: Extent, nx: Int, ny: Int) {
   /** The unique owning cell of a point (clamped into the grid). */
   @inline def cellOf(x: Double, y: Double): Long = cellId(cellX(x), cellY(y))
 
-  /** All cells overlapped by an MBR — the replication set. */
-  def cellsOf(g: Geom): Seq[Long] = {
-    val cx0 = cellX(g.xmin); val cx1 = cellX(g.xmax)
-    val cy0 = cellY(g.ymin); val cy1 = cellY(g.ymax)
-    val out = new scala.collection.mutable.ArrayBuffer[Long]((cx1 - cx0 + 1) * (cy1 - cy0 + 1))
+  def keyOf(x: Double, y: Double): Long = cellOf(x, y)
+
+  def keys(xmin: Double, xmax: Double, ymin: Double, ymax: Double): UnsafeArrayData = {
+    val ax = cellX(xmin); val bx = cellX(xmax)
+    val ay = cellY(ymin); val by = cellY(ymax)
+    val cx0 = math.min(ax, bx); val cx1 = math.max(ax, bx)
+    val cy0 = math.min(ay, by); val cy1 = math.max(ay, by)
+    val out = KeyScheme.longArray((cx1 - cx0 + 1).toLong * (cy1 - cy0 + 1))
+    var i = 0
     var cy = cy0
     while (cy <= cy1) {
       var cx = cx0
-      while (cx <= cx1) { out += cellId(cx, cy); cx += 1 }
+      while (cx <= cx1) { out.setLong(i, cellId(cx, cy)); i += 1; cx += 1 }
       cy += 1
     }
-    out.toSeq
+    out
   }
+
+  def describe: String = {
+    import KeyScheme.fmt
+    s"grid ${nx}x$ny [${fmt(extent.xmin)},${fmt(extent.xmax)}]x" +
+      s"[${fmt(extent.ymin)},${fmt(extent.ymax)}]"
+  }
+
+  /** All cells overlapped by an MBR — the replication set ([[keys]]). */
+  def cellsOf(g: Geom): Seq[Long] =
+    keys(g.xmin, g.xmax, g.ymin, g.ymax).toLongArray.toSeq
 
   /** Parent cell id at a `factor`× coarser resolution (H3/S2-style
     * resolution change: the grid is its own hierarchy — parent(cx,cy) =

@@ -1,8 +1,9 @@
 package graft.join
 
-import graft.cells.CellScheme
+import graft.cells.{CellKeys, CellOf, CellScheme, KeyScheme}
 import graft.geom.{Extent, Geom}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.functions._
 
 /** Result pair — the reference's `std::pair<int,int>` / FPGA `result_t`
@@ -30,7 +31,7 @@ private[graft] final case class KeyedGeom(key: Long, side: Int, id: Long,
   *                      correctness oracle (reference J1,
   *                      `cpp/Tree_generation.hpp:707-718`).
   *  - `gridJoin`      — PBSM as a declarative Catalyst plan: replicate each MBR
-  *                      into overlapped grid cells (`explode(sequence)`), then a
+  *                      into overlapped grid cells (`explode(cell_keys)`), then a
   *                      plain *equi-join on cell id* + intersect predicate +
   *                      reference-point ownership filter. Catalyst plans a
   *                      shuffled hash/sort-merge join, AQE handles residual
@@ -177,30 +178,24 @@ object SpatialJoins {
 
   // ---- declarative grid PBSM ------------------------------------------------
 
-  /** Clamped cell coordinate of `v` along one axis, as a column. */
-  private def cellCoord(v: Column, lo: Double, len: Double, n: Int): Column =
-    least(greatest(floor((v - lit(lo)) / lit(len)).cast("long"), lit(0L)), lit(n - 1L))
+  /** Owner key of a point `(x, y)` as a column ([[graft.cells.CellOf]]). */
+  def cellOfCol(s: KeyScheme, x: Column, y: Column): Column =
+    Bridge.column(CellOf(s, Bridge.expression(x), Bridge.expression(y)))
 
-  /** Owning cell id of a point `(x, y)` as a column — must match
-    * `CellScheme.cellOf` exactly.
+  /** One row per key an MBR replicates to: `explode(cell_keys(...))`
+    * ([[graft.cells.CellKeys]]).
     */
-  def cellOfCol(s: CellScheme, x: Column, y: Column): Column =
-    cellCoord(y, s.extent.ymin, s.cellH, s.ny) * lit(s.nx.toLong) +
-      cellCoord(x, s.extent.xmin, s.cellW, s.nx)
+  def explodeKeys(s: KeyScheme, xmin: Column, xmax: Column,
+                  ymin: Column, ymax: Column): Column =
+    explode(Bridge.column(CellKeys(s, Bridge.expression(xmin), Bridge.expression(xmax),
+      Bridge.expression(ymin), Bridge.expression(ymax))))
 
-  /** Replicate rows into every overlapped cell (declarative `flatMap`:
-    * two `explode(sequence(...))` generators, fully codegen-friendly).
+  /** Replicate rows into every overlapped cell: one `explode(cell_keys)`
+    * generator, codegen'd, one result array per row.
     */
-  def withCells(df: DataFrame, s: CellScheme, p: String): DataFrame = {
-    val cx0 = cellCoord(col(s"${p}_xmin"), s.extent.xmin, s.cellW, s.nx)
-    val cx1 = cellCoord(col(s"${p}_xmax"), s.extent.xmin, s.cellW, s.nx)
-    val cy0 = cellCoord(col(s"${p}_ymin"), s.extent.ymin, s.cellH, s.ny)
-    val cy1 = cellCoord(col(s"${p}_ymax"), s.extent.ymin, s.cellH, s.ny)
-    df.withColumn("cy", explode(sequence(cy0, cy1)))
-      .withColumn("cx", explode(sequence(cx0, cx1)))
-      .withColumn("cell", col("cy") * lit(s.nx.toLong) + col("cx"))
-      .drop("cx", "cy")
-  }
+  def withCells(df: DataFrame, s: KeyScheme, p: String): DataFrame =
+    df.withColumn("cell", explodeKeys(s, col(s"${p}_xmin"), col(s"${p}_xmax"),
+      col(s"${p}_ymin"), col(s"${p}_ymax")))
 
   /** Reference-point dedup as a column predicate: the joined cell must be the
     * owner of the intersection's bottom-left corner.
@@ -240,7 +235,7 @@ object SpatialJoins {
     *
     *  - no a-side replication: a point overlaps exactly one cell, so the cell
     *    id is a plain projection (`cellOfCol`) instead of an
-    *    `explode(sequence)` generator pair;
+    *    `explode(cell_keys)` generator;
     *  - no reference-point ownership filter: a (point, polygon) pair can meet
     *    only in the point's own cell (cell coords are monotone in the
     *    coordinate, so a polygon containing the point always covers that
@@ -288,11 +283,19 @@ object SpatialJoins {
     */
   private[graft] val IndexMinRows = 512
 
-  /** Dispatch between the sweep and the STR-indexed loop. */
-  private[graft] def joinCellOwned(as: Array[CellGeom], bs: Array[CellGeom],
-                                   ownsRef: (Double, Double) => Boolean): Iterator[Pair] =
+  /** Dispatch between the sweep and the STR-indexed loop. A row with a NaN
+    * `ymin` intersects nothing under the IEEE comparisons of the local join
+    * (`ymin <= o.ymax` is false) and has no place in the sweep's ymin order,
+    * so such rows are dropped before either loop sees them.
+    */
+  private[graft] def joinCellOwned(as0: Array[CellGeom], bs0: Array[CellGeom],
+                                   ownsRef: (Double, Double) => Boolean): Iterator[Pair] = {
+    def valid(gs: Array[CellGeom]) =
+      if (gs.exists(_.ymin.isNaN)) gs.filterNot(_.ymin.isNaN) else gs
+    val as = valid(as0); val bs = valid(bs0)
     if (math.min(as.length, bs.length) >= IndexMinRows) strOwned(as, bs, ownsRef)
     else sweepOwned(as, bs, ownsRef)
+  }
 
   /** STR-indexed per-cell join: build on the smaller side, probe with the
     * larger; emits the same (intersect ∧ owns) pair set as [[sweepOwned]].
@@ -357,7 +360,7 @@ object SpatialJoins {
               k += 1
             }
             if (!found) { i += 1; k = 0; anchorA = true } else return
-          } else if (!anchorA || as(i).ymin > bs(j).ymin) {
+          } else {
             anchorA = false
             if (k < i) k = i
             var found = false
@@ -393,7 +396,7 @@ object SpatialJoins {
 
   /** PBSM grid join with the plane-sweep/STR inner loop. For a plain
     * [[CellScheme]] the replication phase is DECLARATIVE (the same codegen'd
-    * `explode(sequence)` generators as [[gridJoin]]) followed by one
+    * `explode(cell_keys)` generator as [[gridJoin]]) followed by one
     * `repartition(cell)` + partition-local sort + a run-grouping
     * `mapPartitions` — object construction happens ONCE per row on the
     * reduce side. The typed-cogroup body paid a per-row
@@ -405,7 +408,7 @@ object SpatialJoins {
   def gridJoinSweep(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame = {
     // POINT-side specialization (the stripes/dense twin of [[gridJoinPIP]]):
     // a zero-extent side overlaps exactly one cell, so its map side is a
-    // plain PROJECTION (no explode(sequence) generator pair) — the same
+    // plain PROJECTION (no explode(cell_keys) generator) — the same
     // max-edge evidence intersectJoin computes, measured here by one fused
     // aggregation over both inputs. The aggregation is a data pass, so it is
     // GATED on Catalyst stats (≳1M estimated rows): small inputs keep the
@@ -438,21 +441,20 @@ object SpatialJoins {
     */
   private[graft] def gridJoinSweepHinted(a: Dataset[Geom], b: Dataset[Geom],
                                          s: CellScheme, aPts: Boolean,
-                                         bPts: Boolean): DataFrame = {
-    def rep(ds: Dataset[Geom], p: String, side: Int, pts: Boolean): DataFrame =
-      if (pts)
-        // a point (xmin==xmax, ymin==ymax) replicates to exactly its own
-        // cell: the generator pair degenerates to a projection
-        ds.toDF().select(cellOfCol(s, col("xmin"), col("ymin")).as("key"),
-          lit(side).as("side"), col("id"),
-          col("xmin"), col("xmax"), col("ymin"), col("ymax"))
-      else
-        withCells(prefixed(ds, p), s, p)
-          .select(col("cell").as("key"), lit(side).as("side"), col(s"${p}_id").as("id"),
-            col(s"${p}_xmin").as("xmin"), col(s"${p}_xmax").as("xmax"),
-            col(s"${p}_ymin").as("ymin"), col(s"${p}_ymax").as("ymax"))
-    keyedPartitionJoin(rep(a, "a", 0, aPts).unionByName(rep(b, "b", 1, bPts)),
-      (rx, ry) => s.cellOf(rx, ry))
+                                         bPts: Boolean): DataFrame =
+    keyedPartitionJoin(keyed(a, 0, s, aPts).unionByName(keyed(b, 1, s, bPts)), s.keyOf)
+
+  /** The keyed union-frame rows `(key, side, id, xmin, xmax, ymin, ymax)` of
+    * one side: one row per replicated key, or — for a point side (xmin ==
+    * xmax, ymin == ymax), which overlaps exactly its own cell — one row keyed
+    * by a plain projection.
+    */
+  private def keyed(ds: Dataset[Geom], side: Int, s: KeyScheme, pts: Boolean): DataFrame = {
+    val key =
+      if (pts) cellOfCol(s, col("xmin"), col("ymin"))
+      else explodeKeys(s, col("xmin"), col("xmax"), col("ymin"), col("ymax"))
+    ds.toDF().select(key.as("key"), lit(side).as("side"), col("id"),
+      col("xmin"), col("xmax"), col("ymin"), col("ymax"))
   }
 
   /** Reduce side of the repartition+sort join: the pre-keyed union frame
@@ -579,7 +581,7 @@ object SpatialJoins {
     val ac = withCells(prefixed(a, "a"), s, "a")
       .withColumn("skey", col("cell") * salt + pmod(xxhash64(col("a_id")), lit(salt.toLong)))
     val bc = withCells(prefixed(b, "b"), s, "b").withColumnRenamed("cell", "b_cell")
-      .withColumn("bucket", explode(sequence(lit(0L), lit(salt - 1L))))
+      .withColumn("bucket", explode(typedLit((0L until salt).toArray)))
       .withColumn("b_skey", col("b_cell") * salt + col("bucket"))
     ac.join(bc, col("skey") === col("b_skey") && intersectPred && ownsPred(s, col("cell")))
       .select(col("a_id"), col("b_id"))
@@ -643,66 +645,12 @@ object SpatialJoins {
         else math.max(estRowsFromStats(a), estRowsFromStats(b)) / base.numCells.toDouble
       if (perCellEst > 256.0) gridJoinSweep(a, b, base) else gridJoin(a, b, base)
     } else {
-      // declarative two-level replication + the same repartition+sort reduce
-      // as gridJoinSweep — the map side stays in whole-stage codegen instead
-      // of paying the typed-cogroup decode/alloc/encode per replica
-      def rep(ds: Dataset[Geom], p: String, side: Int): DataFrame =
-        withAdaptiveKeys(prefixed(ds, p), scheme, p)
-          .select(col("key"), lit(side).as("side"), col(s"${p}_id").as("id"),
-            col(s"${p}_xmin").as("xmin"), col(s"${p}_xmax").as("xmax"),
-            col(s"${p}_ymin").as("ymin"), col(s"${p}_ymax").as("ymax"))
-      keyedPartitionJoin(rep(a, "a", 0).unionByName(rep(b, "b", 1)),
-        scheme.ownerKey)
+      // declarative two-level replication (one `cell_keys` generator over
+      // the adaptive scheme) + the same repartition+sort reduce as
+      // gridJoinSweep — the map side stays in whole-stage codegen
+      keyedPartitionJoin(keyed(a, 0, scheme, pts = false)
+        .unionByName(keyed(b, 1, scheme, pts = false)), scheme.ownerKey)
     }
-  }
-
-  /** Replicate rows onto the adaptive two-level `key` as PURE column
-    * expressions — the declarative twin of `AdaptiveScheme.keysOf`, kept in
-    * bit-exact lockstep with it (same base-cell clamping via [[withCells]],
-    * same `lo + cx·cellW` / `cellW / s` / `floor((v−lo)/len)` double
-    * arithmetic, same clamped sub-ranges, same `cell·4096 (+1+sy·s+sx)`
-    * packing). The split table rides as a literal map (splits are few by
-    * construction); unsplit cells take the slot-0 key without touching the
-    * division path.
-    */
-  private[graft] def withAdaptiveKeys(df: DataFrame,
-                                      scheme: graft.skew.AdaptiveScheme,
-                                      p: String): DataFrame = {
-    val base = scheme.base
-    // empty split table: map_from_arrays over two zero-length literals yields
-    // NullType keys and fails analysis in try_element_at — short-circuit to
-    // the slot-0 key (the helper must be total even though gridJoinAdaptive
-    // routes the no-splits case to the plain-grid plan before calling it)
-    if (scheme.splits.isEmpty)
-      return withCells(df, base, p)
-        .withColumn("key", col("cell") * lit(scheme.keyMultiplier))
-        .drop("cell")
-    val cells = scheme.splits.keys.toArray.sorted
-    val splitMap = map_from_arrays(
-      array(cells.map(lit(_)): _*),
-      array(cells.map(c => lit(scheme.splits(c))): _*))
-    val s = col("s")
-    val cx = (col("cell") % lit(base.nx.toLong)).cast("double")
-    val cy = floor(col("cell").cast("double") / lit(base.nx.toDouble))
-    val lox = lit(base.extent.xmin) + cx * lit(base.cellW)
-    val loy = lit(base.extent.ymin) + cy * lit(base.cellH)
-    val subW = lit(base.cellW) / s.cast("double")
-    val subH = lit(base.cellH) / s.cast("double")
-    def sub(v: Column, lo: Column, len: Column): Column =
-      least(greatest(floor((v - lo) / len).cast("long"), lit(0L)),
-        (s - 1).cast("long"))
-    withCells(df, base, p)
-      .withColumn("s", coalesce(try_element_at(splitMap, col("cell")), lit(0)))
-      .withColumn("sy", explode(when(s === 0, sequence(lit(0L), lit(0L)))
-        .otherwise(sequence(sub(col(s"${p}_ymin"), loy, subH),
-                            sub(col(s"${p}_ymax"), loy, subH)))))
-      .withColumn("sx", explode(when(s === 0, sequence(lit(0L), lit(0L)))
-        .otherwise(sequence(sub(col(s"${p}_xmin"), lox, subW),
-                            sub(col(s"${p}_xmax"), lox, subW)))))
-      .withColumn("key", when(s === 0, col("cell") * lit(scheme.keyMultiplier))
-        .otherwise(col("cell") * lit(scheme.keyMultiplier) + lit(1L) +
-          col("sy") * s.cast("long") + col("sx")))
-      .drop("s", "sy", "sx", "cell")
   }
 
   // ---- distance join --------------------------------------------------------

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.cells.CellScheme
+import graft.cells.{CellKeys, CellOf, CellScheme}
 import graft.functions.STIntersects
 import graft.geom.Extent
 import org.apache.spark.sql.SparkSession
@@ -14,8 +14,9 @@ import org.apache.spark.sql.types.LongType
   * `a JOIN b ON st_intersects(ax0, ax1, ay0, ay1, bx0, bx1, by0, by1) [AND …]`
   * — which Catalyst would otherwise plan as a broadcast-nested-loop /
   * cartesian θ-join — into the PBSM cell plan: both sides are exploded into
-  * grid cells (`Generate(Explode(Sequence(...)))`), equi-joined on the cell
-  * id, re-filtered with the intersect predicate, and deduplicated with the
+  * grid cells (`Generate(Explode(CellKeys(...)))`, a structural point side
+  * gets a `CellOf` projection instead), equi-joined on the cell id,
+  * re-filtered with the intersect predicate, and deduplicated with the
   * reference-point ownership test. Identical semantics, shuffle-partitioned
   * execution.
   *
@@ -29,43 +30,30 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
   val ExtentKey = "spark.graft.extent"
   val GridKey = "spark.graft.grid.n"
 
+  /** The session grid, read from the conf of the session being optimized;
+    * a malformed value fails naming its key.
+    */
   private def scheme: CellScheme = {
-    val c = SparkSession.active.conf
-    val ext = c.get(ExtentKey, "0,10000,0,10000").split(',').map(_.trim.toDouble)
-    val n = c.get(GridKey, "128").toInt
+    val extText = conf.getConfString(ExtentKey, "0,10000,0,10000")
+    val ext = extText.split(',').map(v => scala.util.Try(v.trim.toDouble).getOrElse(Double.NaN))
+    require(ext.length == 4 && ext.forall(java.lang.Double.isFinite) &&
+      ext(0) < ext(1) && ext(2) < ext(3),
+      s"$ExtentKey must be four finite numbers xmin,xmax,ymin,ymax with min < max, got '$extText'")
+    val nText = conf.getConfString(GridKey, "128")
+    val n = scala.util.Try(nText.trim.toInt).getOrElse(0)
+    require(n > 0, s"$GridKey must be a positive integer, got '$nText'")
     CellScheme(Extent(ext(0), ext(1), ext(2), ext(3)), n, n)
   }
 
   private def lit(d: Double): Expression = Literal(d)
-  private def litL(l: Long): Expression = Literal(l)
-
-  /** least(greatest(floor((v - lo) / len), 0), n-1) — must mirror
-    * `SpatialJoins.cellCoord` / `CellScheme.cellX`.
-    */
-  private def cellCoord(v: Expression, lo: Double, len: Double, n: Int): Expression =
-    Least(Seq(Greatest(Seq(Floor(Divide(Subtract(v, lit(lo)), lit(len))), litL(0L))), litL(n - 1L)))
-
-  private def cellOf(s: CellScheme, x: Expression, y: Expression): Expression =
-    Add(Multiply(cellCoord(y, s.extent.ymin, s.cellH, s.ny), litL(s.nx.toLong)),
-        cellCoord(x, s.extent.xmin, s.cellW, s.nx))
 
   /** Explode a side into its overlapped cells; returns (plan, cellAttr). */
   private def withCells(s: CellScheme, child: LogicalPlan,
                         x0: Expression, x1: Expression,
                         y0: Expression, y1: Expression): (LogicalPlan, Attribute) = {
-    val cy = AttributeReference("__graft_cy", LongType)()
-    val cx = AttributeReference("__graft_cx", LongType)()
-    val tz = Some(conf.sessionLocalTimeZone)
-    val genY = Generate(
-      Explode(Sequence(cellCoord(y0, s.extent.ymin, s.cellH, s.ny),
-                       cellCoord(y1, s.extent.ymin, s.cellH, s.ny), None, tz)),
-      Nil, outer = false, None, Seq(cy), child)
-    val genX = Generate(
-      Explode(Sequence(cellCoord(x0, s.extent.xmin, s.cellW, s.nx),
-                       cellCoord(x1, s.extent.xmin, s.cellW, s.nx), None, tz)),
-      Nil, outer = false, None, Seq(cx), genY)
-    val cell = Alias(Add(Multiply(cy, litL(s.nx.toLong)), cx), "__graft_cell")()
-    (Project(child.output :+ cell, genX), cell.toAttribute)
+    val cell = AttributeReference("__graft_cell", LongType, nullable = false)()
+    (Generate(Explode(CellKeys(s, x0, x1, y0, y1)), Nil, outer = false, None, Seq(cell), child),
+      cell)
   }
 
   /** Point-side cell assignment: a single projection, no generators (the
@@ -74,7 +62,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
     */
   private def withCellPoint(s: CellScheme, child: LogicalPlan,
                             x: Expression, y: Expression): (LogicalPlan, Attribute) = {
-    val cell = Alias(cellOf(s, x, y), "__graft_cell")()
+    val cell = Alias(CellOf(s, x, y), "__graft_cell")()
     (Project(child.output :+ cell, child), cell.toAttribute)
   }
 
@@ -179,7 +167,7 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
             val owns =
               if (lPt || rPt) Nil
               else Seq(EqualTo(
-                cellOf(s, Greatest(Seq(ax0, bx0)), Greatest(Seq(ay0, by0))), lcell))
+                CellOf(s, Greatest(Seq(ax0, bx0)), Greatest(Seq(ay0, by0))), lcell))
             val newCond = (Seq(EqualTo(lcell, rcell), intersect) ++ owns ++
               refinement(st, pa, pb, r) ++ rest).reduce(And)
             Project(j.output, Join(lp, rp, Inner, Some(newCond), hint))

@@ -1,8 +1,11 @@
 package graft.skew
 
-import graft.cells.CellScheme
+import graft.cells.{CellScheme, KeyScheme}
 import graft.geom.Geom
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 
 /** Adaptive refinement of hot cells — the Spark re-expression of the
@@ -18,21 +21,16 @@ import org.apache.spark.sql.functions._
   * (`partition_utils.hpp:226-277` semantics) to bound replication blow-up.
   */
 /** `perCellMean` (optional, set by [[AdaptiveCells.plan]]): mean occupied-cell
-  * population per side, measured by the planning aggregation — the zero-splits
+  * population per side, measured by the planning pass — the zero-splits
   * fallthrough routes its inner loop on it (sweep/STR for dense cells,
   * declarative SMJ otherwise) instead of re-deriving a borderline estimate
   * from Catalyst byte statistics.
   */
 final case class AdaptiveScheme(base: CellScheme, splits: Map[Long, Int],
-                                perCellMean: Double = -1.0) {
+                                perCellMean: Double = -1.0) extends KeyScheme {
   // key layout: base cell id << 12 | (1 + subIdx); plain cells use subIdx slot 0
   private final val SubBits = 12
   require(splits.values.forall(s => s * s < (1 << SubBits) - 1), "split factor too large")
-
-  /** `key = cell * keyMultiplier (+ 1 + subIdx)` — the packing the
-    * declarative replication (`SpatialJoins.withAdaptiveKeys`) must match.
-    */
-  def keyMultiplier: Long = 1L << SubBits
 
   // the split lookup sits on the PER-PAIR hot path (ownership test of every
   // emitted candidate): a scala Map[Long, Int] boxes the key on every get —
@@ -65,35 +63,114 @@ final case class AdaptiveScheme(base: CellScheme, splits: Map[Long, Int],
     }
   }
 
-  /** All final keys overlapped by an MBR. */
-  def keysOf(g: Geom): Seq[Long] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    base.cellsOf(g).foreach { c =>
-      splitOf(c) match {
-        case 0 => out += (c << SubBits)
-        case s =>
-          val cx = (c % base.nx).toInt; val cy = (c / base.nx).toInt
-          val lox = base.extent.xmin + cx * base.cellW
-          val loy = base.extent.ymin + cy * base.cellH
-          val subW = base.cellW / s; val subH = base.cellH / s
-          val sx0 = subCoord(g.xmin, lox, subW, s); val sx1 = subCoord(g.xmax, lox, subW, s)
-          val sy0 = subCoord(g.ymin, loy, subH, s); val sy1 = subCoord(g.ymax, loy, subH, s)
-          var sy = sy0
-          while (sy <= sy1) {
-            var sx = sx0
-            while (sx <= sx1) { out += ((c << SubBits) | (1L + sy.toLong * s + sx)); sx += 1 }
-            sy += 1
-          }
+  def keyOf(x: Double, y: Double): Long = ownerKey(x, y)
+
+  /** Walks the keys of an MBR: counts them, and stores them into `out`
+    * unless it is null (count pass, then fill pass — one array per row).
+    */
+  private def walk(xmin: Double, xmax: Double, ymin: Double, ymax: Double,
+                   out: UnsafeArrayData): Long = {
+    val ax = base.cellX(xmin); val bx = base.cellX(xmax)
+    val ay = base.cellY(ymin); val by = base.cellY(ymax)
+    val cx0 = math.min(ax, bx); val cx1 = math.max(ax, bx)
+    val cy0 = math.min(ay, by); val cy1 = math.max(ay, by)
+    var n = 0L
+    var cy = cy0
+    while (cy <= cy1) {
+      var cx = cx0
+      while (cx <= cx1) {
+        val c = base.cellId(cx, cy)
+        splitOf(c) match {
+          case 0 =>
+            if (out != null) out.setLong(n.toInt, c << SubBits)
+            n += 1
+          case s =>
+            val lox = base.extent.xmin + cx * base.cellW
+            val loy = base.extent.ymin + cy * base.cellH
+            val subW = base.cellW / s; val subH = base.cellH / s
+            val px = subCoord(xmin, lox, subW, s); val qx = subCoord(xmax, lox, subW, s)
+            val py = subCoord(ymin, loy, subH, s); val qy = subCoord(ymax, loy, subH, s)
+            val sx0 = math.min(px, qx); val sx1 = math.max(px, qx)
+            val sy0 = math.min(py, qy); val sy1 = math.max(py, qy)
+            if (out == null) n += (sx1 - sx0 + 1).toLong * (sy1 - sy0 + 1)
+            else {
+              var sy = sy0
+              while (sy <= sy1) {
+                var sx = sx0
+                while (sx <= sx1) {
+                  out.setLong(n.toInt, (c << SubBits) | (1L + sy.toLong * s + sx))
+                  n += 1; sx += 1
+                }
+                sy += 1
+              }
+            }
+        }
+        cx += 1
       }
+      cy += 1
     }
-    out.toSeq
+    n
   }
+
+  def keys(xmin: Double, xmax: Double, ymin: Double, ymax: Double): UnsafeArrayData = {
+    val out = KeyScheme.longArray(walk(xmin, xmax, ymin, ymax, null))
+    walk(xmin, xmax, ymin, ymax, out)
+    out
+  }
+
+  def describe: String = s"${base.describe}, ${splits.size} split cells"
+
+  /** All final keys overlapped by an MBR ([[keys]]). */
+  def keysOf(g: Geom): Seq[Long] = keys(g.xmin, g.xmax, g.ymin, g.ymax).toLongArray.toSeq
 
   def owns(key: Long, a: Geom, b: Geom): Boolean =
     ownerKey(math.max(a.xmin, b.xmin), math.max(a.ymin, b.ymin)) == key
 }
 
+/** One planning task's sampled replica rows: `(cell, w, h)` of at most the
+  * task's row cap, chosen uniformly (reservoir) out of the `seen` replica
+  * rows the task read.
+  */
+private[graft] final class PlanRows(val cells: Array[Long], val w: Array[Double],
+                                    val h: Array[Double], val n: Int, val seen: Long)
+    extends Serializable
+
+private[graft] object PlanRows {
+  def collect(it: Iterator[InternalRow], cap: Int, seed: Long): PlanRows = {
+    var cells = new Array[Long](math.min(cap, 1024))
+    var w = new Array[Double](cells.length)
+    var h = new Array[Double](cells.length)
+    val rnd = new java.util.SplittableRandom(seed)
+    var seen = 0L
+    while (it.hasNext) {
+      val r = it.next()
+      val slot =
+        if (seen < cap) {
+          if (seen == cells.length) {
+            val m = math.min(cap.toLong, 2L * cells.length).toInt
+            cells = java.util.Arrays.copyOf(cells, m)
+            w = java.util.Arrays.copyOf(w, m)
+            h = java.util.Arrays.copyOf(h, m)
+          }
+          seen.toInt
+        } else {
+          val j = rnd.nextLong(seen + 1)
+          if (j < cap) j.toInt else -1
+        }
+      if (slot >= 0) { cells(slot) = r.getLong(0); w(slot) = r.getDouble(1); h(slot) = r.getDouble(2) }
+      seen += 1
+    }
+    new PlanRows(cells, w, h, math.min(seen, cap.toLong).toInt, seen)
+  }
+}
+
 object AdaptiveCells {
+
+  /** Most sampled replica rows one plan collects to the driver (~24 B
+    * each); above it every planning task keeps a uniform subsample of its
+    * rows.
+    */
+  private val PlanRowCap: Int = 1 << 21
 
   /** Plan splits from per-cell counts: a hot cell gets an s×s subgrid with
     * s ≈ (|A|·|B| / budget)^(1/4) (each side shrinks ~s², the product ~s⁴
@@ -112,136 +189,88 @@ object AdaptiveCells {
     * (measured 8× slower than the plain sweep on a gaussian 197×197-cell
     * workload where the old `|A|·|B| > budget` rule fired everywhere).
     * `budgetPairs` remains the floor of the threshold and sizes `s`.
-    */
-  /** `sampleFraction < 1` estimates per-cell counts from a Bernoulli sample
-    * (scaled back up) — at petabyte scale the planning pass must not read the
-    * full input. Splits are a performance heuristic only; exactly-once
+    *
+    * `sampleFraction < 1` estimates per-cell counts from a sample (scaled
+    * back up) — at petabyte scale the planning pass must not read the full
+    * input. Splits are a performance heuristic only; exactly-once
     * correctness never depends on the estimate (reference-point ownership is
-    * local arithmetic).
+    * local arithmetic, SkewSpec asserts oracle equality on sampled plans).
+    *
+    * Cost: ONE Spark job with one stage over the input (no shuffle, no
+    * persist). Each task replicates its rows with the join's own
+    * `cell_keys` and returns the narrow `(cell, w, h)` replica rows, at most
+    * [[PlanRowCap]] in total; the driver derives counts, the work
+    * distribution, the hot cells and their exact median extents locally.
     */
   def plan(a: Dataset[Geom], b: Dataset[Geom], base: CellScheme,
            budgetPairs: Long = 4L * 1024 * 1024, maxSplit: Int = 32,
            sampleFraction: Double = 1.0, spreadFactor: Double = 4.0): AdaptiveScheme = {
-    import a.sparkSession.implicits._
-    // ONE fused planning aggregation: both (sampled) inputs are tagged with
-    // a side bit, replicated to their cells, and counted conditionally in a
-    // single groupBy — one pass over each input and one job, where the r3
-    // version paid one aggregation job PER SIDE plus a join (the "adaptive
-    // pays both planning aggregations" verdict note). The replication is the
-    // DECLARATIVE withCells explode (whole-stage codegen) — the r4 typed
-    // flatMap decoded/re-encoded every row and made the planning pass cost
-    // ~2 s of the zero-splits path's 5.3 s at 10M (Tune-measured; the gate's
-    // whole point is that this pass is the only premium on even density).
-    // The aggregation carries COUNTS ONLY; the object-size split clamp reads
-    // per-cell extent MEDIANS from a second bounded pass that runs only when
-    // over-threshold cells exist — the even-density zero-splits path (the
-    // one whose planning premium the concentration gate exists to protect)
-    // pays nothing for the clamp at all. The r5 version persisted the
-    // Bernoulli samples and ran a separate global-percentile pass
-    // unconditionally, ~40% of the whole planning premium on the
-    // even-density bench workload.
-    val sampled = sampleFraction < 1.0
-    // PARTITION-level sampling (r6 verdict item 3): a Bernoulli `sample()`
-    // still SCANS every input row — the dominant residual share of the
-    // planning premium once the aggregation itself is fused. Keeping whole
-    // partitions (a deterministic stride over the partition index) reads
-    // only the kept partitions' rows; skipped partitions' task iterators
-    // are never consumed, so their cache blocks / row groups never
-    // decompress. Bias guard: at least 4 partitions are kept, they are
-    // stride-SPREAD across the input (not a contiguous range, so an
-    // id-ordered or file-ordered layout contributes from its whole span),
-    // and inputs with < 16 partitions fall back to the Bernoulli sample.
-    // The estimate only picks split factors — exactly-once ownership is
-    // local arithmetic, so a biased sample costs plan quality, never
-    // correctness (SkewSpec asserts oracle equality on sampled plans).
-    def sampleSide(ds: Dataset[Geom], seed: Long): (Dataset[Geom], Double) =
-      if (!sampled) (ds, 1.0)
-      else {
-        val p = ds.rdd.getNumPartitions
-        val want = math.max(4, math.round(p * sampleFraction).toInt)
-        if (p < 16 || want >= p) (ds.sample(sampleFraction, seed), 1.0 / sampleFraction)
-        else {
-          val stride = p / want
-          val kept = (p + stride - 1) / stride // #{i : i % stride == 0}
-          val rdd = ds.rdd.mapPartitionsWithIndex(
-            (i, it) => if (i % stride == 0) it else Iterator.empty,
-            preservesPartitioning = true)
-          // narrow-coalesce away the skipped (empty) partitions: the two
-          // planning stages otherwise dispatch p mostly-no-op tasks each —
-          // measurable fixed cost at p=64-128 against a sub-second plan
-          (ds.sparkSession.createDataset(rdd.coalesce(kept)), p.toDouble / kept)
-        }
-      }
-    val (sa, scaleA) = sampleSide(a, 42L)
-    val (sb, scaleB) = sampleSide(b, 43L)
-    def tagged(ds: Dataset[Geom], side: Int) =
-      graft.join.SpatialJoins.withCells(
-          ds.toDF("p_id", "p_xmin", "p_xmax", "p_ymin", "p_ymax"), base, "p")
-        .select(col("cell"), lit(side).as("side"),
-          (col("p_xmax") - col("p_xmin")).as("w"),
-          (col("p_ymax") - col("p_ymin")).as("h"))
-    // The tagged (replicated, NARROW — 4 columns) sample is read twice when
-    // splits are planned: once for counts, once for the hot-cell medians. A
-    // Bernoulli sample still SCANS every input row, so before r6 the median
-    // pass re-paid two full input scans — the dominant share of the planning
-    // premium once splits exist. Persisting the sampled tagged frame (~f·n·
-    // replication narrow rows, materialized for free during the counts scan)
-    // makes the median pass a cache read. Never persisted on the unsampled
-    // path, where this frame is the full replicated input.
-    val taggedAll = {
-      val t = tagged(sa, 0).unionByName(tagged(sb, 1))
-      if (sampled) t.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else t
-    }
-    try {
-    // raw (unscaled) per-cell counts; callers scale at use
-    val counts0 = taggedAll
-      .groupBy("cell")
-      .agg(count(when(col("side") === 0, lit(1))).as("cna"),
-           count(when(col("side") === 1, lit(1))).as("cnb"))
-    // Grids bounded enough to hold per-cell counts on the driver (every
-    // realistic base grid — the planner's own forSize caps at maxN²) take
-    // ONE job: collect the aggregated rows and derive totals, the work
-    // distribution, the over-threshold cells AND the extent clamp locally.
-    // Unbounded grids fall back to persist + two distributed aggregations.
-    // Per-cell count PRODUCTS are compared in double: at petabyte scale (and
-    // sample scale-up) they overflow int64 and would silently skip hot
-    // cells. The split clamp (below) reads each over-threshold cell's OWN
-    // extent medians, so no global statistic is computed here.
-    val (totalA, totalB, sumProd, occupiedCells, overThreshold) =
-      if (base.numCells <= (1L << 20)) {
-        val all = counts0.collect() // ≤ numCells rows of (cell, cna, cnb)
-        val sumP = all.iterator.map(r =>
-          r.getLong(1) * scaleA * (r.getLong(2) * scaleB)).sum
-        (all.iterator.map(_.getLong(1)).sum * scaleA,
-         all.iterator.map(_.getLong(2)).sum * scaleB,
-         sumP, math.max(1L, all.length.toLong),
-         (threshold: Double) =>
-           all.filter(r => r.getLong(1) * scaleA *
-             (r.getLong(2) * scaleB) > threshold))
+    val sc = a.sparkSession.sparkContext
+    def replicas(ds: Dataset[Geom]) =
+      ds.select(graft.join.SpatialJoins.explodeKeys(base, col("xmin"), col("xmax"),
+          col("ymin"), col("ymax")).as("cell"),
+        (col("xmax") - col("xmin")).as("w"), (col("ymax") - col("ymin")).as("h"))
+        .queryExecution.toRdd
+    // PARTITION-level sampling: a Bernoulli `sample()` still SCANS every
+    // input row. Keeping whole partitions (a deterministic stride over the
+    // partition index) reads only the kept partitions — the job simply runs
+    // no task for the others. Bias guard: at least 4 partitions are kept,
+    // stride-SPREAD across the input (an id- or file-ordered layout
+    // contributes from its whole span), and inputs with < 16 partitions fall
+    // back to the Bernoulli sample. A biased sample costs plan quality,
+    // never correctness.
+    def side(ds: Dataset[Geom], seed: Long) = {
+      val all = replicas(ds)
+      val p = all.getNumPartitions
+      val want = math.max(4, math.round(p * sampleFraction).toInt)
+      if (sampleFraction >= 1.0) (all, 0 until p, 1.0)
+      else if (p < 16 || want >= p) {
+        val s = replicas(ds.sample(sampleFraction, seed))
+        (s, 0 until s.getNumPartitions, 1.0 / sampleFraction)
       } else {
-        val cached = counts0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val prod = col("cna").cast("double") * lit(scaleA) *
-          col("cnb").cast("double") * lit(scaleB)
-        val tot = cached.agg(coalesce(sum("cna"), lit(0L)), coalesce(sum("cnb"), lit(0L)),
-          coalesce(sum(prod), lit(0.0)), count(lit(1))).head()
-        ((tot.getLong(0) * scaleA, tot.getLong(1) * scaleB, tot.getDouble(2),
-          math.max(1L, tot.getLong(3)),
-          (threshold: Double) => {
-            val rows = cached.filter(prod > threshold).collect()
-            cached.unpersist()
-            rows
-          }))
+        val kept = 0 until p by (p / want)
+        (all, kept, p.toDouble / kept.size)
       }
-    val perCellMean = math.max(totalA, totalB) / occupiedCells
-    val parallelism = math.max(1, a.sparkSession.sparkContext.defaultParallelism)
+    }
+    val (ra, keptA, scaleA) = side(a, 42L)
+    val (rb, keptB, scaleB) = side(b, 43L)
+    val parts = keptA ++ keptB.map(_ + ra.getNumPartitions)
+    val cap = math.max(1, PlanRowCap / math.max(1, parts.size))
+    val got = sc.runJob(sc.union(ra, rb),
+      (ctx: TaskContext, it: Iterator[InternalRow]) =>
+        PlanRows.collect(it, cap, ctx.partitionId().toLong), parts)
+
+    // per-cell counts (a row stands for seen/n replicas of its task, times
+    // the side's sampling scale). Products are compared in double: at
+    // petabyte scale they overflow int64.
+    final class Cell {
+      var na = 0.0; var nb = 0.0; var rows = 0
+      var ws: Array[Double] = null; var hs: Array[Double] = null; var k = 0
+    }
+    val cells = scala.collection.mutable.LongMap.empty[Cell]
+    got.iterator.zipWithIndex.foreach { case (t, i) =>
+      val wt = if (t.n == 0) 0.0 else t.seen.toDouble / t.n
+      var j = 0
+      while (j < t.n) {
+        val c = cells.getOrElseUpdate(t.cells(j), new Cell)
+        if (i < keptA.size) c.na += wt else c.nb += wt
+        c.rows += 1
+        j += 1
+      }
+    }
+    def prod(c: Cell) = c.na * scaleA * (c.nb * scaleB)
+    val totalA = cells.valuesIterator.map(_.na).sum * scaleA
+    val totalB = cells.valuesIterator.map(_.nb).sum * scaleB
+    val sumProd = cells.valuesIterator.map(prod).sum
+    val perCellMean = math.max(totalA, totalB) / math.max(1, cells.size)
+    val parallelism = math.max(1, sc.defaultParallelism)
     // split threshold: the larger of the absolute budget and the balanced
     // per-worker share of total candidate work — a cell below the share can
     // never be the straggler, so splitting it buys nothing
     val splitThreshold =
       math.max(budgetPairs.toDouble, sumProd / (spreadFactor * parallelism))
-    val counts = overThreshold(splitThreshold)
-    if (counts.isEmpty) return AdaptiveScheme(base, Map.empty, perCellMean)
+    val hot = cells.filter { case (_, c) => prod(c) > splitThreshold }
+    if (hot.isEmpty) return AdaptiveScheme(base, Map.empty, perCellMean)
     // split clamp: a subcell must stay ≥ ~2 MEDIAN object extents OF THE
     // CELL BEING SPLIT (reference stop rule `partition_utils.hpp:226-277`
     // samples a global median; per-cell is strictly more targeted). Per-cell
@@ -252,27 +281,27 @@ object AdaptiveCells {
     // minority of cell-sized residents pulls the mean to ~0.3 cell widths
     // (cap 1 — split vetoed) while the majority is tiny and splits fine; the
     // median tracks the majority and only vetoes when most residents really
-    // span the cell. Computed in ONE extra bounded aggregation filtered to
-    // the over-threshold cells (≲ spreadFactor·parallelism of them by
-    // construction) — the zero-splits path never reaches this job.
-    // sCap < 2 means the cell is already ~2 median extents: no split at all.
-    val hotCells = counts.map(_.getLong(0)).toSeq
-    val med = taggedAll
-      .filter(col("cell").isInCollection(hotCells))
-      .groupBy("cell")
-      .agg(percentile_approx(col("w"), lit(0.5), lit(10000)).as("mw"),
-           percentile_approx(col("h"), lit(0.5), lit(10000)).as("mh"))
-      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-    val splits = counts.map { r =>
-      val (mw, mh) = med.getOrElse(r.getLong(0), (1e-12, 1e-12))
+    // span the cell. sCap < 2 means no split at all.
+    hot.valuesIterator.foreach { c => c.ws = new Array[Double](c.rows); c.hs = new Array[Double](c.rows) }
+    got.foreach { t =>
+      var j = 0
+      while (j < t.n) {
+        val c = hot.getOrNull(t.cells(j))
+        if (c != null) { c.ws(c.k) = t.w(j); c.hs(c.k) = t.h(j); c.k += 1 }
+        j += 1
+      }
+    }
+    def median(vs: Array[Double]): Double = {
+      java.util.Arrays.sort(vs); vs((vs.length - 1) / 2)
+    }
+    val splits = hot.map { case (k, c) =>
+      val mw = median(c.ws); val mh = median(c.hs)
       val sCapW = math.max(1, (base.cellW / (2 * math.max(mw, 1e-12))).toInt)
       val sCapH = math.max(1, (base.cellH / (2 * math.max(mh, 1e-12))).toInt)
       val sCap = math.min(maxSplit, math.min(sCapW, sCapH))
-      val prod = r.getLong(1) * scaleA * (r.getLong(2) * scaleB)
-      val s = math.ceil(math.pow(prod / budgetPairs, 0.25)).toInt + 1
-      r.getLong(0) -> math.min(s, sCap)
+      val s = math.ceil(math.pow(prod(c) / budgetPairs, 0.25)).toInt + 1
+      k -> math.min(s, sCap)
     }.filter(_._2 >= 2).toMap
     AdaptiveScheme(base, splits, perCellMean)
-    } finally { if (sampled) taggedAll.unpersist() }
   }
 }

@@ -93,31 +93,6 @@ class SkewSpec extends AnyFunSuite {
     assert(adaptive == sweep && adaptive == salted && adaptive.nonEmpty)
   }
 
-  test("declarative adaptive replication == AdaptiveScheme.keysOf (random boundary sweep)") {
-    import org.apache.spark.sql.functions.col
-    val base = CellScheme(Extent(0, 100, 0, 100), 4, 4)
-    val scheme = AdaptiveScheme(base, Map(0L -> 3, 5L -> 2, 10L -> 7))
-    val rnd = new scala.util.Random(17)
-    val gs = (0 until 4000).map { i =>
-      // mix of tiny/large rects, some snapped to cell/subcell boundaries
-      def coord() = {
-        val v = rnd.nextDouble() * 100
-        if (rnd.nextInt(4) == 0) math.floor(v / 25.0 / 3) * 25.0 / 3 else v
-      }
-      val x = coord(); val y = coord()
-      val w = if (rnd.nextBoolean()) rnd.nextDouble() * 2 else rnd.nextDouble() * 40
-      Geom(i.toLong, x, math.min(100, x + w), y, math.min(100, y + w))
-    }
-    import spark.implicits._
-    val df = spark.createDataset(gs).toDF(
-      "a_id", "a_xmin", "a_xmax", "a_ymin", "a_ymax")
-    val declarative = SpatialJoins.withAdaptiveKeys(df, scheme, "a")
-      .select(col("a_id"), col("key"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = gs.flatMap(g => scheme.keysOf(g).map(k => (g.id, k))).toSet
-    assert(declarative == want)
-  }
-
   test("concentration gate: evenly dense cells plan ZERO splits even far over budget") {
     // every cell's |A|·|B| (~312² ≈ 97k) is ~100× the budget — the r4 rule
     // split them all (measured 8× slower than the plain sweep on the
@@ -191,17 +166,17 @@ class SkewSpec extends AnyFunSuite {
     assert(want.nonEmpty)
   }
 
-  test("planner's distributed fallback (numCells > 2^20) agrees with the collect path") {
-    // grids too large to collect per-cell counts on the driver take the
-    // persist + two-aggregation path — same totals, same threshold, same
-    // split decisions, oracle-equal join
+  test("planner on a >2^20-cell grid finds the same hot corner as on a 2^20-cell grid") {
+    // the planner collects capped replica rows, never per-cell state sized
+    // by the grid, so a grid beyond 2^20 cells plans through the same single
+    // job — same threshold logic, splits found, oracle-equal join
     val a = Workloads.hotspotPolygons(spark, 8000, seed = 41, mapEdge = 1000.0,
       hotFrac = 0.5, hotX = 100, hotY = 100, hotW = 1.0, meanEdge = 0.05)
     val b = Workloads.hotspotPolygons(spark, 8000, seed = 42, mapEdge = 1000.0,
       hotFrac = 0.5, hotX = 100, hotY = 100, hotW = 1.0, meanEdge = 0.05)
     val ext = Extent(0, 1001, 0, 1001)
-    val small = CellScheme(ext, 1024, 1024)       // = 2^20 → collect path
-    val large = CellScheme(ext, 2048, 1024)       // > 2^20 → distributed path
+    val small = CellScheme(ext, 1024, 1024)       // = 2^20 cells
+    val large = CellScheme(ext, 2048, 1024)       // > 2^20 cells
     val ps = AdaptiveCells.plan(a, b, small, budgetPairs = 100000)
     val pl = AdaptiveCells.plan(a, b, large, budgetPairs = 100000)
     // both paths must find the hot corner (it sits inside one cell on both
@@ -210,20 +185,6 @@ class SkewSpec extends AnyFunSuite {
     val want = pairs(SpatialJoins.broadcastNL(a, b))
     assert(pairs(SpatialJoins.gridJoinAdaptive(a, b, large, budgetPairs = 100000)) == want)
     assert(want.nonEmpty)
-  }
-
-  test("withAdaptiveKeys is total on an empty split table (slot-0 keys)") {
-    import org.apache.spark.sql.functions.col
-    val base = CellScheme(Extent(0, 100, 0, 100), 4, 4)
-    val scheme = AdaptiveScheme(base, Map.empty)
-    import spark.implicits._
-    val gs = Seq(Geom(1, 5, 30, 5, 30), Geom(2, 80, 99, 80, 99), Geom(3, 0, 0, 0, 0))
-    val df = spark.createDataset(gs).toDF("a_id", "a_xmin", "a_xmax", "a_ymin", "a_ymax")
-    val got = SpatialJoins.withAdaptiveKeys(df, scheme, "a")
-      .select(col("a_id"), col("key"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val want = gs.flatMap(g => scheme.keysOf(g).map(k => (g.id, k))).toSet
-    assert(got == want)
   }
 
   test("zero-splits gate: even-density input routes to the plain-grid plan") {
@@ -237,5 +198,72 @@ class SkewSpec extends AnyFunSuite {
     assert(!phys.contains("CoGroup"), phys)
     val want = pairs(SpatialJoins.broadcastNL(a, b))
     assert(pairs(planned) == want && want.nonEmpty)
+  }
+
+  test("split planning is one job with one stage and no persist") {
+    val a = Workloads.hotspotPolygons(spark, 8000, seed = 61, mapEdge = 1000.0,
+      hotFrac = 0.5, hotX = 100, hotY = 100, hotW = 1.0, meanEdge = 0.05).repartition(32).cache()
+    val b = Workloads.hotspotPolygons(spark, 8000, seed = 62, mapEdge = 1000.0,
+      hotFrac = 0.5, hotX = 100, hotY = 100, hotW = 1.0, meanEdge = 0.05).repartition(32).cache()
+    try {
+      a.count(); b.count()
+      val base = CellScheme(Extent(0, 1001, 0, 1001), 16, 16)
+      val hotCell = base.cellOf(100.5, 100.5)
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val stages = new java.util.concurrent.atomic.AtomicInteger // submitted, not skipped
+      @volatile var drained = false
+      def group(p: java.util.Properties) = Option(p).map(_.getProperty("spark.jobGroup.id"))
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          group(e.properties) match {
+            case Some("plan-probe") => jobs.incrementAndGet()
+            case Some("plan-probe-end") => drained = true
+            case _ =>
+          }
+        override def onStageSubmitted(
+            e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+          if (group(e.properties).contains("plan-probe")) stages.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      val persisted = sc.getPersistentRDDs.size
+      try {
+        for (fraction <- Seq(1.0, 0.1)) {
+          jobs.set(0); stages.set(0); drained = false
+          sc.setJobGroup("plan-probe", "adaptive planning")
+          val planned = try AdaptiveCells.plan(a, b, base, budgetPairs = 100000,
+              sampleFraction = fraction)
+            finally sc.clearJobGroup()
+          sc.setJobGroup("plan-probe-end", "listener barrier")
+          try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+          val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+          while (!drained && System.nanoTime() < deadline) Thread.sleep(10)
+          assert(drained)
+          assert(jobs.get == 1 && stages.get == 1,
+            s"fraction $fraction: ${jobs.get} jobs, ${stages.get} stages")
+          assert(sc.getPersistentRDDs.size == persisted)
+          assert(planned.splits.getOrElse(hotCell, 1) >= 2,
+            s"fraction $fraction: hot corner must split (splits=${planned.splits})")
+        }
+      } finally sc.removeSparkListener(listener)
+    } finally { a.unpersist(); b.unpersist() }
+  }
+
+  test("a planning task over its row cap keeps a uniform subsample and counts what it saw") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    def rows(n: Int) = Iterator.tabulate(n)(i => InternalRow(i.toLong, i * 0.5, i * 0.25))
+    val all = graft.skew.PlanRows.collect(rows(300), cap = 1000, seed = 1L)
+    assert(all.n == 300 && all.seen == 300)
+    assert(all.cells.take(300).toSeq == (0L until 300L))
+    assert((0 until 300).forall(j => all.w(j) == j * 0.5 && all.h(j) == j * 0.25))
+    val capped = graft.skew.PlanRows.collect(rows(20000), cap = 1000, seed = 1L)
+    assert(capped.n == 1000 && capped.seen == 20000)
+    val kept = capped.cells.take(capped.n)
+    assert(kept.distinct.length == 1000 && kept.forall(c => c >= 0 && c < 20000))
+    assert((0 until 1000).forall(j => capped.w(j) == kept(j) * 0.5))
+    // uniform over the whole stream, not the head: every fifth of it is hit
+    // in proportion (expected 200 per fifth, sd ~13)
+    val perFifth = kept.groupBy(c => (c / 4000).toInt).map { case (k, v) => k -> v.length }
+    assert((0 until 5).forall(f => math.abs(perFifth.getOrElse(f, 0) - 200) < 80), perFifth)
   }
 }

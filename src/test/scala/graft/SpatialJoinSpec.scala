@@ -72,12 +72,18 @@ class MT19937Spec extends AnyFunSuite {
   }
 }
 
-class SpatialJoinSpec extends AnyFunSuite {
+class SpatialJoinSpec extends AnyFunSuite with org.scalatest.concurrent.TimeLimits {
   lazy val spark: SparkSession = TestSpark.spark
   import SpatialJoins._
 
   private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** `Sequence` expressions anywhere in a frame's optimized plan. */
+  private def sequences(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case q: org.apache.spark.sql.catalyst.expressions.Sequence => q
+    })).size
 
   private def randomSet(seed: Int, n: Int, edge: Double, mapLen: Double = 100.0) = {
     import TestSpark.spark.implicits._
@@ -170,7 +176,7 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(pairs(gridJoinPIP(rects, b, s)) == pairs(gridJoin(corners, b, s)))
   }
 
-  test("intersectJoin auto-routes a point side to the PIP plan (2 generators, not 4)") {
+  test("intersectJoin auto-routes a point side to the PIP plan (1 generator, not 2)") {
     val pts = randomSet(14, 30000, 0.0)
     val polys = randomSet(15, 30000, 4.0)
     def generates(df: org.apache.spark.sql.DataFrame): Int =
@@ -178,15 +184,15 @@ class SpatialJoinSpec extends AnyFunSuite {
         case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
       }.size
     val viaA = intersectJoin(pts, polys, broadcastThreshold = 100)
-    assert(generates(viaA) == 2, "point a-side must skip the a-side explode pair")
+    assert(generates(viaA) == 1, "point a-side must skip the a-side generator")
     val viaB = intersectJoin(polys, pts, broadcastThreshold = 100)
-    assert(generates(viaB) == 2, "point b-side must route through the swapped PIP plan")
+    assert(generates(viaB) == 1, "point b-side must route through the swapped PIP plan")
     val oracle = pairs(broadcastNL(pts, polys))
     assert(pairs(viaA) == oracle)
     assert(pairs(viaB) == oracle.map { case (x, y) => (y, x) })
     // no point side → generic replicate+own plan (both sides exploded)
     assert(generates(intersectJoin(polys, randomSet(16, 30000, 4.0),
-      broadcastThreshold = 100)) == 4)
+      broadcastThreshold = 100)) == 2)
   }
 
   test("sweep point specialization: projection-only point side, identical pairs (grid + stripes)") {
@@ -206,8 +212,8 @@ class SpatialJoinSpec extends AnyFunSuite {
                   CellScheme.stripesX(ext, 7))) {
       val hinted = SpatialJoins.gridJoinSweepHinted(pts, polys, s,
         aPts = true, bPts = false)
-      assert(generates(hinted) == 2,
-        s"point side must be a projection (only the poly side's generator pair remains), scheme $s")
+      assert(generates(hinted) == 1,
+        s"point side must be a projection (only the poly side's generator remains), scheme $s")
       assert(pairs(hinted) == oracle, s"hinted pair set, scheme $s")
       val swapped = SpatialJoins.gridJoinSweepHinted(polys, pts, s,
         aPts = false, bPts = true)
@@ -254,5 +260,68 @@ class SpatialJoinSpec extends AnyFunSuite {
         .map(t => (ga.id, t._1))
     }.toSet
     assert(got == want)
+  }
+
+  test("no spatial-join plan replicates through a Sequence expression") {
+    val a = randomSet(30, 400, 5.0)
+    val b = randomSet(31, 300, 5.0)
+    val pts = randomSet(32, 300, 0.0)
+    val ext = Extent(0, 106, 0, 106)
+    val s = CellScheme(ext, 7, 7)
+    val plans = Seq(
+      "gridJoin" -> gridJoin(a, b, s),
+      "gridJoinPIP" -> gridJoinPIP(pts, b, s),
+      "gridJoinSweep" -> gridJoinSweep(a, b, s),
+      "gridJoinSweepHinted" -> gridJoinSweepHinted(pts, b, s, aPts = true, bPts = false),
+      "gridJoinHinted" -> gridJoinHinted(a, b, s, "shuffle_hash"),
+      "gridJoinPred" -> gridJoinPred(a, b, s, withinPred),
+      "gridJoinSalted" -> gridJoinSalted(a, b, s, salt = 3),
+      "distanceJoin" -> distanceJoin(a, b, s, 2.0),
+      "stripesJoin" -> stripesJoin(a, b, ext, 9),
+      "intersectJoin" -> intersectJoin(a, b, broadcastThreshold = 10),
+      "rasterize" -> graft.ops.Raster.rasterize(a, s))
+    for ((name, df) <- plans) {
+      assert(sequences(df) == 0, s"$name plans a Sequence")
+      assert(df.count() >= 0)
+    }
+  }
+
+  test("a NaN ymin never hangs a local join (sweep, adaptive with splits, sort-tile, binary-split)") {
+    import TestSpark.spark.implicits._
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: org.scalatest.concurrent.Signaler =
+      org.scalatest.concurrent.ThreadSignaler
+    // the repro: both sweep branch tests were false on a NaN ymin, so the
+    // sweep's advance() spun forever
+    val reproA = Seq(Geom(13, 2, 8, Double.NaN, 8), Geom(1, 0, 10, 0, 10))
+    val reproB = Seq(Geom(2, 1, 3, 1, 3), Geom(3, 5, 9, 5, 9))
+    // a dense cluster in the repro's cell makes the adaptive planner split it
+    def cluster(idBase: Long, off: Double) = (0 until 300).map { i =>
+      val x = 1 + (i % 17) * 0.3 + off; val y = 1 + (i / 17) * 0.3 + off
+      Geom(idBase + i, x, x + 0.1, y, y + 0.1)
+    }
+    val ext = Extent(0, 100, 0, 100)
+    val base = CellScheme(ext, 4, 4)
+    for ((as, bs) <- Seq((reproA, reproB),
+                         (reproA ++ cluster(100, 0.0), reproB ++ cluster(1000, 0.05)))) {
+      val a = spark.createDataset(as)
+      val b = spark.createDataset(bs)
+      val oracle = pairs(broadcastNL(a, b))
+      assert(oracle.contains((1L, 2L)) && oracle.contains((1L, 3L)))
+      assert(!oracle.exists(_._1 == 13L))
+      if (as.size > 2)
+        assert(graft.skew.AdaptiveCells.plan(a, b, base, budgetPairs = 1000).splits.nonEmpty,
+          "the cluster cell must be split")
+      val routes = Seq(
+        "gridJoinSweep" -> (() => gridJoinSweep(a, b, base)),
+        "gridJoinAdaptive" -> (() => gridJoinAdaptive(a, b, base, budgetPairs = 1000)),
+        "sortTileJoin" -> (() => sortTileJoin(a, b, ext, 2, 2)),
+        "binarySplitJoin" -> (() => binarySplitJoin(a, b, ext, 2)))
+      for ((name, run) <- routes) {
+        val got = failAfter(90.seconds)(pairs(run()))
+        assert(got == oracle, s"$name on ${as.size} x ${bs.size} rows")
+      }
+      assert(sequences(gridJoinAdaptive(a, b, base, budgetPairs = 1000)) == 0)
+    }
   }
 }

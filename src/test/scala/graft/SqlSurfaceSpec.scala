@@ -6,6 +6,12 @@ import org.scalatest.funsuite.AnyFunSuite
 class SqlSurfaceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** `Sequence` expressions anywhere in a frame's optimized plan. */
+  private def sequences(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+      case q: org.apache.spark.sql.catalyst.expressions.Sequence => q
+    })).size
+
   test("st_intersects join is rewritten to the cell plan and matches the oracle") {
     GraftSql.install(spark)
     spark.conf.set(SpatialJoinRule.ExtentKey, "0,1000,0,1000")
@@ -22,6 +28,12 @@ class SqlSurfaceSpec extends AnyFunSuite {
     val phys = df.queryExecution.executedPlan.toString
     assert(!phys.contains("BroadcastNestedLoopJoin") && !phys.contains("CartesianProduct"),
       s"rewrite did not fire:\n$phys")
+    assert(sequences(df) == 0)
+    // explain names the grid the rule used
+    val explained = df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExtendedMode)
+    assert(explained.contains("cell_keys(grid 32x32 [0,1000]x[0,1000]"), explained)
+    assert(explained.contains("cell_of(grid 32x32 [0,1000]x[0,1000]"), explained)
     val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = graft.join.SpatialJoins.broadcastNL(a, b)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -46,6 +58,7 @@ class SqlSurfaceSpec extends AnyFunSuite {
       val phys = df.queryExecution.executedPlan.toString
       assert(!phys.contains("BroadcastNestedLoopJoin") && !phys.contains("CartesianProduct"),
         s"$fn rewrite did not fire:\n$phys")
+      assert(sequences(df) == 0, fn)
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     def pref(ds: org.apache.spark.sql.Dataset[graft.geom.Geom], p: String) =
@@ -79,7 +92,8 @@ class SqlSurfaceSpec extends AnyFunSuite {
     val opt = df.queryExecution.optimizedPlan
     val gens = opt.collect {
       case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g }.size
-    assert(gens == 2, s"point side must not be exploded (got $gens generators)")
+    assert(gens == 1, s"point side must not be exploded (got $gens generators)")
+    assert(sequences(df) == 0)
     val phys = df.queryExecution.executedPlan.toString
     assert(!phys.contains("BroadcastNestedLoopJoin") && !phys.contains("CartesianProduct"))
     val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -95,8 +109,59 @@ class SqlSurfaceSpec extends AnyFunSuite {
         |                  b.xmin, b.xmax, b.ymin, b.ymax)""".stripMargin)
     val gGens = generic.queryExecution.optimizedPlan.collect {
       case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g }.size
-    assert(gGens == 4, "distinct columns must stay on the generic plan")
+    assert(gGens == 2, "distinct columns must stay on the generic plan")
     assert(generic.count() == want.size)
+  }
+
+  test("a malformed spark.graft.extent or spark.graft.grid.n fails naming the key") {
+    GraftSql.install(spark)
+    val dir = "/root/testdata/sf0.001"
+    graft.api.Derived.partRects.load(spark, dir).createOrReplaceTempView("sqlc_a")
+    graft.api.Derived.ordersRects.load(spark, dir).createOrReplaceTempView("sqlc_b")
+    def plan(): Unit = spark.sql(
+      """SELECT a.id FROM sqlc_a a JOIN sqlc_b b
+        | ON st_intersects(a.xmin, a.xmax, a.ymin, a.ymax,
+        |                  b.xmin, b.xmax, b.ymin, b.ymax)""".stripMargin)
+      .queryExecution.optimizedPlan
+    try {
+      spark.conf.set(SpatialJoinRule.GridKey, "32")
+      for (bad <- Seq("0,1000,0", "0,1000,0,1000,5", "0,x,0,1000", "0,NaN,0,1000",
+                      "0,Infinity,0,1000", "1000,0,0,1000", "0,1000,5,5")) {
+        spark.conf.set(SpatialJoinRule.ExtentKey, bad)
+        val e = intercept[IllegalArgumentException](plan())
+        assert(e.getMessage.contains(SpatialJoinRule.ExtentKey), s"$bad: ${e.getMessage}")
+      }
+      spark.conf.set(SpatialJoinRule.ExtentKey, "0,1000,0,1000")
+      for (bad <- Seq("0", "-4", "abc", "")) {
+        spark.conf.set(SpatialJoinRule.GridKey, bad)
+        val e = intercept[IllegalArgumentException](plan())
+        assert(e.getMessage.contains(SpatialJoinRule.GridKey), s"'$bad': ${e.getMessage}")
+      }
+      spark.conf.set(SpatialJoinRule.GridKey, "32")
+      plan()
+    } finally {
+      spark.conf.set(SpatialJoinRule.ExtentKey, "0,1000,0,1000")
+      spark.conf.set(SpatialJoinRule.GridKey, "32")
+    }
+  }
+
+  test("the rewrite reads the grid of the session being optimized") {
+    GraftSql.install(spark)
+    spark.conf.set(SpatialJoinRule.ExtentKey, "0,1000,0,1000")
+    spark.conf.set(SpatialJoinRule.GridKey, "32")
+    val other = GraftSql.install(spark.newSession())
+    other.conf.set(SpatialJoinRule.ExtentKey, "0,2000,0,2000")
+    other.conf.set(SpatialJoinRule.GridKey, "16")
+    val dir = "/root/testdata/sf0.001"
+    graft.api.Derived.partRects.load(other, dir).createOrReplaceTempView("sqls_a")
+    graft.api.Derived.ordersRects.load(other, dir).createOrReplaceTempView("sqls_b")
+    val df = other.sql(
+      """SELECT a.id FROM sqls_a a JOIN sqls_b b
+        | ON st_intersects(a.xmin, a.xmax, a.ymin, a.ymax,
+        |                  b.xmin, b.xmax, b.ymin, b.ymax)""".stripMargin)
+    org.apache.spark.sql.SparkSession.setActiveSession(spark)
+    val plan = df.queryExecution.optimizedPlan.toString
+    assert(plan.contains("cell_keys(grid 16x16 [0,2000]x[0,2000]"), plan)
   }
 
   test("st_intersects evaluates standalone (marker expression fallback)") {
