@@ -91,7 +91,7 @@ object Bench {
         def schemeOf(n: Int) = if (dir == 'x') CellScheme.stripesX(ext, n)
                                else CellScheme.stripesY(ext, n)
         // stripes hold ~n/10000 rows each — far over the declarative plan's
-        // dense-cell break-even, so run the cogroup PLANE-SWEEP inner loop
+        // dense-cell break-even, so run the keyed PLANE-SWEEP inner loop
         // (what the reference's 1d_stripes.hpp does; the declarative SMJ
         // loop is quadratic per stripe: measured 18.8 s vs ~2 s)
         val scheme = schemeOf(10000)
@@ -171,7 +171,7 @@ object Bench {
       SpatialJoins.gridJoinAdaptive(a, b, scheme, budgetPairs = 1L << 22,
         planSampleFraction = 0.02).count()
     }
-    sweep() // warm (codegen + JIT for the shared cogroup body)
+    sweep() // warm (codegen + JIT for the shared keyed sweep body)
     // min-of-3 sweep samples INTERLEAVED with the other families (r3 verdict:
     // min-of-2 let a single neighbour-load spike sink the OSM-PP-class
     // number — the one metric that round missed its bar on a polluted run);
@@ -427,7 +427,7 @@ object Bench {
   }
 
   /** Dense-cell evidence (reference J2): the declarative grid join's
-    * per-cell loop is quadratic in cell population, the cogroup path's
+    * per-cell loop is quadratic in cell population, the keyed sweep path's
     * STR-indexed loop is not — measured at targetPerCell=2048 where the two
     * plans diverge (they agree at the flagship's tpc=16).
     */
@@ -717,7 +717,7 @@ object Bench {
          || Gaussian (OSM-like) PP ${math.max(benchN / 5, 100000L)}×same, adaptive join | ${f"$tSkew%.3f"} s / $resSkew results |
          || same skew via plain grid / sort-tile (STP) / binary-split (BSP) | ${f"$tSkewGrid%.2f"} / ${f"$tSkewStp%.2f"} / ${f"$tSkewBsp%.2f"} s (counts match: $skewCountsMatch; warmed, interleaved min-of-2; STP/BSP scheme build excluded, adaptive's planning pass included) |
          || **HOT-DISTRICT (adaptive's winning regime)**: ${math.max(benchN / 10, 100000L)}×same, 15% of rows in a 100-unit district inside ONE cell (~5,400× the 4M-pair budget, ~${resHot / 1000000}M pairs from that cell) | adaptive **${f"$tHotAdaptive%.2f"} s** vs plain grid ${f"$tHotGrid%.2f"} s (${f"${tHotGrid / tHotAdaptive}%.1f"}×) vs salted×32 ${f"$tHotSalted%.2f"} s (${f"${tHotSalted / tHotAdaptive}%.1f"}×, single run) — $resHot results, counts match: $hotCountsMatch; adaptive's time includes its sampled planning pass |
-         || Dense cells (tpc=2048): declarative vs cogroup+STR | ${f"$tDenseDecl%.2f"} s vs ${f"$tDenseStr%.2f"} s (same $resDense results) |
+         || Dense cells (tpc=2048): declarative vs keyed sweep+STR | ${f"$tDenseDecl%.2f"} s vs ${f"$tDenseStr%.2f"} s (same $resDense results) |
          || N→4N scaling (local[$nSmall]→local[$nMid]) | ${f"${tJoinSmall / tJoinMid}%.2f"}× (ideal 4×), efficiency ${f"$eff%.2f"} |
          || 4N→full (local[$nMid]→local[$cpus]) | efficiency ${f"$effWide%.2f"} |
          |

@@ -2,6 +2,7 @@ package graft.cells
 
 import graft.geom.{Extent, Geom}
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 
 /** Binary-split partitioning (the reference's SpatialSpark BSP method,
   * `spark_scripts/PartitionedSpatialJoin.scala:166-175`): a kd-tree built by
@@ -17,13 +18,14 @@ import org.apache.spark.sql.Dataset
   * every other scheme — and that is exactly what the driver oracle checks.
   */
 final case class BinarySplitScheme(extent: Extent, depth: Int,
-                                   splitAxisX: Array[Boolean], splitAt: Array[Double]) {
+                                   splitAxisX: Array[Boolean], splitAt: Array[Double])
+    extends KeyScheme {
   require(splitAxisX.length == (1 << depth) - 1 && splitAt.length == splitAxisX.length)
 
   def numLeaves: Int = 1 << depth
 
   /** Unique owning leaf of a point (half-open: >= split goes right). */
-  def cellOf(x: Double, y: Double): Long = {
+  def keyOf(x: Double, y: Double): Long = {
     var node = 0
     var level = 0
     while (level < depth) {
@@ -34,20 +36,36 @@ final case class BinarySplitScheme(extent: Extent, depth: Int,
     (node - (numLeaves - 1)).toLong
   }
 
-  /** All leaves overlapped by an MBR — stack descent pruning by the split. */
-  def cellsOf(g: Geom): Seq[Long] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def walk(node: Int, level: Int): Unit =
-      if (level == depth) out += (node - (numLeaves - 1)).toLong
-      else {
-        val s = splitAt(node)
-        val (lo, hi) = if (splitAxisX(node)) (g.xmin, g.xmax) else (g.ymin, g.ymax)
-        if (lo < s) walk(2 * node + 1, level + 1)
-        if (hi >= s) walk(2 * node + 2, level + 1)
-      }
-    walk(0, 0)
-    out.toSeq
+  /** Descends to every leaf the box [xlo, xhi] × [ylo, yhi] overlaps,
+    * pruning by each split: counts the leaves from `n` on, and stores them
+    * into `out` unless it is null. A point goes right iff `v >= split`, so
+    * the box goes left unless its low end already goes right — which also
+    * sends every box left at a NaN split (sampled centers of rows spanning
+    * -Inf..Inf are NaN), exactly where [[keyOf]] sends every point.
+    */
+  private def walk(node: Int, level: Int, xlo: Double, xhi: Double,
+                   ylo: Double, yhi: Double, out: UnsafeArrayData, n: Int): Int =
+    if (level == depth) {
+      if (out != null) out.setLong(n, (node - (numLeaves - 1)).toLong)
+      n + 1
+    } else {
+      val s = splitAt(node)
+      val x = splitAxisX(node)
+      var m = n
+      if (!((if (x) xlo else ylo) >= s)) m = walk(2 * node + 1, level + 1, xlo, xhi, ylo, yhi, out, m)
+      if ((if (x) xhi else yhi) >= s) m = walk(2 * node + 2, level + 1, xlo, xhi, ylo, yhi, out, m)
+      m
+    }
+
+  def keys(xmin: Double, xmax: Double, ymin: Double, ymax: Double): UnsafeArrayData = {
+    val xlo = math.min(xmin, xmax); val xhi = math.max(xmin, xmax)
+    val ylo = math.min(ymin, ymax); val yhi = math.max(ymin, ymax)
+    val out = KeyScheme.longArray(walk(0, 0, xlo, xhi, ylo, yhi, null, 0))
+    walk(0, 0, xlo, xhi, ylo, yhi, out, 0)
+    out
   }
+
+  def describe: String = s"binary-split depth $depth ${KeyScheme.box(extent)}"
 }
 
 object BinarySplitScheme {

@@ -1,5 +1,6 @@
 package graft.cells
 
+import graft.geom.{Extent, Geom}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, QuaternaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
@@ -8,7 +9,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * it overlaps, and a point (the reference point of a candidate pair) has
   * exactly one owner key. [[CellKeys]] and [[CellOf]] evaluate the scheme
   * object itself, so the DataFrame plans, the SQL rewrite, the split planner
-  * and the JVM-side `cellsOf`/`keysOf` all run the same arithmetic.
+  * and the JVM-side `keysOf`/`owns` all run the same arithmetic.
+  *
+  * Exactly-once contract: an intersecting pair's reference point (the
+  * bottom-left corner of the intersection, `(max xmin, max ymin)`) lies in
+  * both rows' [min, max] boxes, so its owner key is among the keys both rows
+  * replicate to, and a pair is kept only in that key.
   */
 trait KeyScheme extends Serializable {
   /** The unique owner key of a point. */
@@ -22,11 +28,24 @@ trait KeyScheme extends Serializable {
 
   /** Short form for `explain` output, e.g. `grid 250x250 [0,10001]x[0,10001]`. */
   def describe: String
+
+  /** Every key the MBR of `g` replicates to ([[keys]]). */
+  def keysOf(g: Geom): Seq[Long] = keys(g.xmin, g.xmax, g.ymin, g.ymax).toLongArray.toSeq
+
+  /** Reference-point ownership: pair (a, b) is kept in `key` iff `key` owns
+    * the bottom-left corner of their intersection.
+    */
+  def owns(key: Long, a: Geom, b: Geom): Boolean =
+    keyOf(math.max(a.xmin, b.xmin), math.max(a.ymin, b.ymin)) == key
 }
 
 object KeyScheme {
-  private[cells] def fmt(d: Double): String =
+  private def fmt(d: Double): String =
     if (d == math.rint(d) && math.abs(d) < 1e15) d.toLong.toString else d.toString
+
+  /** An extent as `[xmin,xmax]x[ymin,ymax]`, for [[KeyScheme.describe]]. */
+  private[cells] def box(e: Extent): String =
+    s"[${fmt(e.xmin)},${fmt(e.xmax)}]x[${fmt(e.ymin)},${fmt(e.ymax)}]"
 
   /** Fresh array of `n` longs (`n` computed in Long so an overflow fails loudly). */
   private[graft] def longArray(n: Long): UnsafeArrayData =

@@ -1,6 +1,6 @@
 package graft.cells
 
-import graft.geom.{Extent, Geom}
+import graft.geom.Extent
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 
 /** Uniform `nx × ny` grid over an extent — the engine's deterministic cell
@@ -60,15 +60,7 @@ final case class CellScheme(extent: Extent, nx: Int, ny: Int) extends KeyScheme 
     out
   }
 
-  def describe: String = {
-    import KeyScheme.fmt
-    s"grid ${nx}x$ny [${fmt(extent.xmin)},${fmt(extent.xmax)}]x" +
-      s"[${fmt(extent.ymin)},${fmt(extent.ymax)}]"
-  }
-
-  /** All cells overlapped by an MBR — the replication set ([[keys]]). */
-  def cellsOf(g: Geom): Seq[Long] =
-    keys(g.xmin, g.xmax, g.ymin, g.ymax).toLongArray.toSeq
+  def describe: String = s"grid ${nx}x$ny ${KeyScheme.box(extent)}"
 
   /** Parent cell id at a `factor`× coarser resolution (H3/S2-style
     * resolution change: the grid is its own hierarchy — parent(cx,cy) =
@@ -85,15 +77,6 @@ final case class CellScheme(extent: Extent, nx: Int, ny: Int) extends KeyScheme 
   def coarsen(factor: Int): CellScheme = {
     require(nx % factor == 0 && ny % factor == 0, s"$factor must divide ${nx}x$ny")
     CellScheme(extent, nx / factor, ny / factor)
-  }
-
-  /** Exactly-once ownership: pair (a, b) is emitted in `cell` iff the
-    * bottom-left corner of their intersection falls in `cell`.
-    */
-  @inline def owns(cell: Long, a: Geom, b: Geom): Boolean = {
-    val rx = math.max(a.xmin, b.xmin)
-    val ry = math.max(a.ymin, b.ymin)
-    cellOf(rx, ry) == cell
   }
 }
 

@@ -2,6 +2,7 @@ package graft.cells
 
 import graft.geom.{Extent, Geom}
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 
 /** Sort-tile partitioning (the reference's SpatialSpark STP method,
   * `spark_scripts/PartitionedSpatialJoin.scala:151-165`): tile boundaries
@@ -20,7 +21,7 @@ import org.apache.spark.sql.Dataset
   * Tile id layout: `slab * sy + tile` (row-major within slab).
   */
 final case class SortTileScheme(extent: Extent, xBounds: Array[Double],
-                                yBounds: Array[Array[Double]]) {
+                                yBounds: Array[Array[Double]]) extends KeyScheme {
   require(yBounds.length == xBounds.length + 1, "one y-boundary vector per slab")
   require(yBounds.forall(_.length == yBounds(0).length),
     "ragged y-boundaries would collide tile ids across slabs (cell = slab*sy + tile)")
@@ -43,26 +44,38 @@ final case class SortTileScheme(extent: Extent, xBounds: Array[Double],
   @inline def tileOf(slab: Int, y: Double): Int = slot(yBounds(slab), y)
 
   /** Unique owning tile of a point. */
-  def cellOf(x: Double, y: Double): Long = {
+  def keyOf(x: Double, y: Double): Long = {
     val s = slabOf(x)
     s.toLong * sy + tileOf(s, y)
   }
 
-  /** All tiles overlapped by an MBR (per-slab y-ranges differ — the
-    * replication loop is per slab, unlike the uniform grid's rectangle).
+  /** Walks the tiles of an MBR (per-slab y-ranges differ, so the loop is per
+    * slab): counts them, and stores them into `out` unless it is null.
     */
-  def cellsOf(g: Geom): Seq[Long] = {
-    val s0 = slabOf(g.xmin); val s1 = slabOf(g.xmax)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var s = s0
+  private def walk(xmin: Double, xmax: Double, ymin: Double, ymax: Double,
+                   out: UnsafeArrayData): Long = {
+    val a = slabOf(xmin); val b = slabOf(xmax)
+    val s1 = math.max(a, b)
+    var n = 0L
+    var s = math.min(a, b)
     while (s <= s1) {
-      val t0 = tileOf(s, g.ymin); val t1 = tileOf(s, g.ymax)
-      var t = t0
-      while (t <= t1) { out += s.toLong * sy + t; t += 1 }
+      val p = tileOf(s, ymin); val q = tileOf(s, ymax)
+      val t1 = math.max(p, q)
+      var t = math.min(p, q)
+      if (out == null) n += t1 - t + 1
+      else while (t <= t1) { out.setLong(n.toInt, s.toLong * sy + t); n += 1; t += 1 }
       s += 1
     }
-    out.toSeq
+    n
   }
+
+  def keys(xmin: Double, xmax: Double, ymin: Double, ymax: Double): UnsafeArrayData = {
+    val out = KeyScheme.longArray(walk(xmin, xmax, ymin, ymax, null))
+    walk(xmin, xmax, ymin, ymax, out)
+    out
+  }
+
+  def describe: String = s"sort-tile ${sx}x$sy ${KeyScheme.box(extent)}"
 }
 
 /** Shared bounded-uniform center sampling for the data-driven schemes: the

@@ -3,7 +3,7 @@ package graft.join
 /** Array-packed STR R-tree over one cell's rectangles — the Spark-side
   * re-expression of the reference's per-partition index (STR packing
   * `spatial-join-baseline/cpp/Tree_generation.hpp:595-641`, query traversal
-  * `cpp/RTree.h:114-165`). Built per cogroup cell over the SMALLER side and
+  * `cpp/RTree.h:114-165`). Built per join cell over the SMALLER side and
   * probed with the other side's rectangles; `gridJoinSweep` switches to it
   * when a cell is dense enough that the plane sweep's y-overlap runs
   * degenerate toward |A|·|B|.
@@ -20,7 +20,7 @@ final class STRTree private (
     childStart: Array[Int], childEnd: Array[Int], leafNode: Array[Boolean],
     root: Int) {
 
-  // reusable traversal stack: trees are task-local (built per cogroup cell),
+  // reusable traversal stack: trees are task-local (built per join cell),
   // so probe calls are single-threaded — one buffer serves every probe with
   // zero per-call allocation. NOT safe to share one tree across threads.
   private var stack = new Array[Int](32)

@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   */
 final case class Pair(a_id: Long, b_id: Long)
 
-private[graft] final case class CellGeom(cell: Long, id: Long, xmin: Double,
-                                         xmax: Double, ymin: Double, ymax: Double)
+private[graft] final case class CellGeom(id: Long, xmin: Double, xmax: Double,
+                                         ymin: Double, ymax: Double)
 
 /** Reduce-side row of the repartition+sort join — all-primitive fields so the
   * codegen'd Dataset deserializer constructs it with ONE allocation per row
@@ -36,11 +36,14 @@ private[graft] final case class KeyedGeom(key: Long, side: Int, id: Long,
   *                      reference-point ownership filter. Catalyst plans a
   *                      shuffled hash/sort-merge join, AQE handles residual
   *                      skew; the whole pipeline is whole-stage-codegen'd.
-  *  - `gridJoinSweep` — same logical plan but the per-cell inner loop is a
-  *                      typed `cogroup` running a plane sweep over y-sorted
-  *                      arrays (reference J5/J6 inner loop,
-  *                      `cpp/1d_stripes.hpp:16-68`), cutting per-cell work from
-  *                      |A|·|B| to sorted-overlap. Used when cells are dense.
+  *  - `gridJoinSweep` — the same replication, then a repartition on the key
+  *                      and a partition-local sort feeding a plane sweep over
+  *                      y-sorted arrays per cell (reference J5/J6 inner loop,
+  *                      `cpp/1d_stripes.hpp:16-68`), or an STR-packed R-tree
+  *                      in dense cells, cutting per-cell work from |A|·|B| to
+  *                      sorted-overlap. Sort-tile, binary-split and adaptive
+  *                      cells run the same keyed join; only the
+  *                      [[graft.cells.KeyScheme]] differs.
   *  - `stripesJoin`   — 1-D stripes = `n × 1` grid (reference J5).
   *
   * Exactly-once semantics: a pair is emitted only in the cell that contains
@@ -118,8 +121,9 @@ object SpatialJoins {
     * Planning cost (the r2 verdict flagged an eager `a.count(); b.count()`
     * here — two full input passes before any join work): the broadcast
     * decision now reads Catalyst statistics (no job at all); only the grid
-    * path runs ONE fused aggregation computing the joint extent (needed to
-    * build the grid anyway) together with both exact row counts.
+    * path runs ONE fused aggregation ([[evidence]]) computing the joint
+    * extent (needed to build the grid anyway) together with both exact row
+    * counts and the point-side evidence.
     */
   def intersectJoin(a: Dataset[Geom], b: Dataset[Geom],
                     broadcastThreshold: Long = 10000L): DataFrame = {
@@ -135,46 +139,75 @@ object SpatialJoins {
     if (small(b)) broadcastNL(a, b)
     else if (small(a))
       broadcastNL(b, a).select(col("b_id").as("a_id"), col("a_id").as("b_id"))
-    else {
-      val u = a.toDF().withColumn("s", lit(0L))
-        .unionByName(b.toDF().withColumn("s", lit(1L)))
-      // the same single planning aggregation also measures each side's max
-      // MBR edge: an all-zero side is a POINT side, which routes to the
-      // cheaper no-replication / no-ownership PIP plan below — detection
-      // costs zero extra jobs. abs() so an INVERTED row (xmax < xmin — never
-      // intersects anything under the inclusive predicate) cannot hide
-      // behind a zero other edge and smuggle the side into the PIP plan,
-      // which would treat it as its (xmin, ymin) corner and emit pairs the
-      // generic plan never would.
-      val edge = greatest(abs(col("xmax") - col("xmin")),
-                          abs(col("ymax") - col("ymin")))
-      val r = u.agg(min("xmin"), max("xmax"), min("ymin"), max("ymax"),
-        count(when(col("s") === 0L, lit(1))), count(lit(1)),
-        max(when(col("s") === 0L, edge)),
-        max(when(col("s") === 1L, edge))).head()
-      // both inputs empty → the min/max agg returns nulls (stats can
-      // OVER-estimate filtered scans, so small() above may be false even for
-      // an empty input); broadcastNL is trivially correct on empty frames
-      if (r.isNullAt(0)) return broadcastNL(a, b)
-      val ext = Extent(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
-      val ca = r.getLong(4); val cb = r.getLong(5) - ca
-      val aPts = !r.isNullAt(6) && r.getDouble(6) == 0.0
-      val bPts = !r.isNullAt(7) && r.getDouble(7) == 0.0
-      val s = CellScheme.forSize(ext, math.max(ca, cb),
-        targetPerCell = 16, maxN = 8192)
-      // when the grid cap binds (rows ≫ 16·maxN²), cells run dense and the
-      // declarative join's per-cell nested loop inside the SMJ group loses to
-      // the cogroup path with its sweep/STR-indexed inner loop
-      val perCellEst = math.max(ca, cb).toDouble / s.numCells.toDouble
-      // the dense route reuses THIS aggregation's point evidence — calling
-      // the public gridJoinSweep would re-measure it in a second job
-      if (perCellEst > 256.0) gridJoinSweepHinted(a, b, s, aPts, bPts)
-      else if (aPts) gridJoinPIP(a, b, s)
-      else if (bPts)
-        gridJoinPIP(b, a, s).select(col("b_id").as("a_id"), col("a_id").as("b_id"))
-      else gridJoin(a, b, s)
+    else evidence(a, b) match {
+      // both inputs empty (stats can OVER-estimate filtered scans, so small()
+      // above may be false even for an empty input): broadcastNL is
+      // trivially correct on empty frames
+      case None => broadcastNL(a, b)
+      case Some(ev) =>
+        route(a, b, CellScheme.forSize(ev.ext, math.max(ev.ca, ev.cb),
+          targetPerCell = 16, maxN = 8192), ev)
     }
   }
+
+  /** Rows per cell (larger side) above which the declarative join's per-cell
+    * nested loop inside the sort-merge-join group loses to the keyed
+    * sweep/STR join — e.g. when the grid cap binds (rows ≫ 16·maxN²).
+    */
+  private val DenseCellRows = 256.0
+
+  /** Planning evidence: the joint extent, each side's row count, and whether
+    * each side is all points (max |edge| == 0).
+    */
+  private final case class Evidence(ext: Extent, ca: Long, cb: Long,
+                                    aPts: Boolean, bPts: Boolean)
+
+  /** The one planning aggregation: a single job over both inputs, or None
+    * when both are empty (the min/max aggregate returns nulls). An all-zero
+    * max edge marks a POINT side, which routes to the no-replication /
+    * no-ownership PIP plan at zero extra jobs. abs() because an INVERTED row
+    * (max < min on an axis) is no point: x (5,3) × y [0,10] intersects
+    * [0,10]² under the inclusive predicate, so it must not hide behind a
+    * zero other edge and smuggle its side into the PIP plan, which would
+    * treat it as its (xmin, ymin) corner.
+    */
+  private def evidence(a: Dataset[Geom], b: Dataset[Geom]): Option[Evidence] = {
+    val u = a.toDF().withColumn("s", lit(0L))
+      .unionByName(b.toDF().withColumn("s", lit(1L)))
+    val edge = greatest(abs(col("xmax") - col("xmin")),
+                        abs(col("ymax") - col("ymin")))
+    val r = u.agg(min("xmin"), max("xmax"), min("ymin"), max("ymax"),
+      count(when(col("s") === 0L, lit(1))), count(lit(1)),
+      max(when(col("s") === 0L, edge)),
+      max(when(col("s") === 1L, edge))).head()
+    if (r.isNullAt(0)) None
+    else Some(Evidence(Extent(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)),
+      r.getLong(4), r.getLong(5) - r.getLong(4),
+      aPts = !r.isNullAt(6) && r.getDouble(6) == 0.0,
+      bPts = !r.isNullAt(7) && r.getDouble(7) == 0.0))
+  }
+
+  /** [[evidence]] GATED on Catalyst stats (≳1M estimated rows on a side, no
+    * job below): the data pass is worth it only against the generator and
+    * shuffle work it can remove, so small inputs plan with zero extra jobs.
+    */
+  private def largeEvidence(a: Dataset[Geom], b: Dataset[Geom]): Option[Evidence] =
+    if (math.max(estRowsFromStats(a), estRowsFromStats(b)) < 1e6) None
+    else evidence(a, b)
+
+  /** The route ladder over a fixed scheme: dense cells → the keyed
+    * sweep/STR join (with the evidence's point sides as projections); a
+    * point side → PIP; otherwise the declarative grid join. Every branch
+    * emits the identical pair set.
+    */
+  private def route(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme,
+                    ev: Evidence): DataFrame =
+    if (math.max(ev.ca, ev.cb).toDouble / s.numCells.toDouble > DenseCellRows)
+      gridJoinSweepHinted(a, b, s, ev.aPts, ev.bPts)
+    else if (ev.aPts) gridJoinPIP(a, b, s)
+    else if (ev.bPts)
+      gridJoinPIP(b, a, s).select(col("b_id").as("a_id"), col("a_id").as("b_id"))
+    else gridJoin(a, b, s)
 
   // ---- declarative grid PBSM ------------------------------------------------
 
@@ -204,6 +237,14 @@ object SpatialJoins {
     cellOfCol(s, greatest(col("a_xmin"), col("b_xmin")),
                  greatest(col("a_ymin"), col("b_ymin"))) === cell
 
+  /** The candidate join of the declarative PBSM plans: a-side cell rows
+    * `ac` equi-joined on the cell with the replicated b side `bc`
+    * ([[bReplicated]]), kept iff the MBRs intersect and the cell owns the
+    * pair's reference point.
+    */
+  private def candidates(ac: DataFrame, bc: DataFrame, s: CellScheme): DataFrame =
+    ac.join(bc, col("cell") === col("b_cell") && intersectPred && ownsPred(s, col("cell")))
+
   /** PBSM grid join as a pure Catalyst plan (equi-join on cell). */
   def gridJoin(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame =
     gridJoinWithCell(a, b, s).select(col("a_id"), col("b_id"))
@@ -212,12 +253,9 @@ object SpatialJoins {
     * result-pair metrics (each pair appears exactly once, in its owner cell,
     * so per-cell counts need no dedup).
     */
-  def gridJoinWithCell(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame = {
-    val ac = withCells(prefixed(a, "a"), s, "a")
-    val bc = withCells(prefixed(b, "b"), s, "b").withColumnRenamed("cell", "b_cell")
-    ac.join(bc, col("cell") === col("b_cell") && intersectPred && ownsPred(s, col("cell")))
+  def gridJoinWithCell(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame =
+    candidates(withCells(prefixed(a, "a"), s, "a"), bReplicated(b, s), s)
       .select(col("a_id"), col("b_id"), col("cell"))
-  }
 
   /** Per-cell result-pair counts (the north rule's per-cell result metrics —
     * the candidate-side counterpart is `spatial_cell_stats`).
@@ -246,8 +284,7 @@ object SpatialJoins {
     val a = pts.toDF().select(col("id").as("a_id"),
       col("xmin").as("a_x"), col("ymin").as("a_y"),
       cellOfCol(s, col("xmin"), col("ymin")).as("cell"))
-    val bc = withCells(prefixed(polys, "b"), s, "b").withColumnRenamed("cell", "b_cell")
-    a.join(bc, col("cell") === col("b_cell") &&
+    a.join(bReplicated(polys, s), col("cell") === col("b_cell") &&
         col("a_x") >= col("b_xmin") && col("a_x") <= col("b_xmax") &&
         col("a_y") >= col("b_ymin") && col("a_y") <= col("b_ymax"))
       .select(col("a_id"), col("b_id"))
@@ -258,21 +295,12 @@ object SpatialJoins {
     * entirely when b's replicated form fits in memory — the J12 path).
     */
   def gridJoinHinted(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme,
-                     hintName: String): DataFrame = {
-    val ac = withCells(prefixed(a, "a"), s, "a")
-    val bc = withCells(prefixed(b, "b"), s, "b").withColumnRenamed("cell", "b_cell").hint(hintName)
-    ac.join(bc, col("cell") === col("b_cell") && intersectPred && ownsPred(s, col("cell")))
+                     hintName: String): DataFrame =
+    candidates(withCells(prefixed(a, "a"), s, "a"), bReplicated(b, s).hint(hintName), s)
       .select(col("a_id"), col("b_id"))
-  }
 
-  // ---- cogroup + plane-sweep grid PBSM -------------------------------------
+  // ---- keyed sweep/STR PBSM ------------------------------------------------
 
-  /** Per-cell plane sweep over ymin-sorted arrays: each intersecting pair is
-    * found exactly once (anchored at the rectangle with the smaller ymin),
-    * checked for x-overlap and cell ownership. O(n log n + overlaps) per cell
-    * instead of |A|·|B| (reference sweep `cpp/1d_stripes.hpp:16-68`, event
-    * order `cpp/Event.h:37-45`).
-    */
   /** Per-cell inner-loop switch: plane sweep for ordinary cells; for DENSE
     * cells (≥ `IndexMinRows` on each side) an STR-packed R-tree over the
     * smaller side, probed by the larger (the reference's J2 sync-traversal
@@ -287,6 +315,11 @@ object SpatialJoins {
     * `ymin` intersects nothing under the IEEE comparisons of the local join
     * (`ymin <= o.ymax` is false) and has no place in the sweep's ymin order,
     * so such rows are dropped before either loop sees them.
+    *
+    * The returned iterator must be consumed strictly in order, each pair
+    * before the next is pulled: [[strOwned]] refills ONE buffer per probe, so
+    * a consumer that buffers the iterator lazily or interleaves two of them
+    * would read cleared or overwritten pairs.
     */
   private[graft] def joinCellOwned(as0: Array[CellGeom], bs0: Array[CellGeom],
                                    ownsRef: (Double, Double) => Boolean): Iterator[Pair] = {
@@ -308,7 +341,7 @@ object SpatialJoins {
     val probes = if (buildA) bs else as
     // STREAMING over probes: materializing the whole per-cell pair set would
     // buffer O(result) Pairs in one task — the per-probe buffer is bounded by
-    // the build side, and the cogroup consumer pulls pairs lazily.
+    // the build side, and the keyed join's consumer pulls pairs lazily.
     // ONE buffer + ONE sink closure reused across all probes (the r6 form
     // allocated an ArrayBuffer and a capturing closure PER PROBE — 10M+
     // allocations in a dense-stripe task). Safe: Iterator.flatMap exhausts
@@ -328,8 +361,11 @@ object SpatialJoins {
     }
   }
 
-  /** Plane sweep with a pluggable reference-point ownership test (shared by
-    * the plain grid and the adaptive two-level scheme).
+  /** Per-cell plane sweep over ymin-sorted arrays with a pluggable
+    * reference-point ownership test: each intersecting pair is found exactly
+    * once (anchored at the rectangle with the smaller ymin). O(n log n +
+    * overlaps) per cell instead of |A|·|B| (reference sweep
+    * `cpp/1d_stripes.hpp:16-68`, event order `cpp/Event.h:37-45`).
     */
   private[graft] def sweepOwned(as: Array[CellGeom], bs: Array[CellGeom],
                                 ownsRef: (Double, Double) => Boolean): Iterator[Pair] = {
@@ -346,8 +382,10 @@ object SpatialJoins {
       private var anchorA = true          // which side the current anchor is on
       private var k = 0                    // scan cursor on the opposite side
       private var pending: Pair = null
-      private def xOverlapOwned(a: CellGeom, b: CellGeom): Boolean =
-        a.xmin <= b.xmax && a.xmax >= b.xmin &&
+      // the full intersect test: the scan order bounds only the scanned
+      // row's ymin, and a row with ymax < ymin can still miss the anchor
+      private def overlapOwned(a: CellGeom, b: CellGeom): Boolean =
+        a.xmin <= b.xmax && a.xmax >= b.xmin && a.ymin <= b.ymax && a.ymax >= b.ymin &&
           ownsRef(math.max(a.xmin, b.xmin), math.max(a.ymin, b.ymin))
       private def advance(): Unit = {
         while (pending == null && i < as.length && j < bs.length) {
@@ -356,7 +394,7 @@ object SpatialJoins {
             if (k < j) k = j
             var found = false
             while (!found && k < bs.length && bs(k).ymin <= as(i).ymax) {
-              if (xOverlapOwned(as(i), bs(k))) { pending = Pair(as(i).id, bs(k).id); found = true }
+              if (overlapOwned(as(i), bs(k))) { pending = Pair(as(i).id, bs(k).id); found = true }
               k += 1
             }
             if (!found) { i += 1; k = 0; anchorA = true } else return
@@ -365,7 +403,7 @@ object SpatialJoins {
             if (k < i) k = i
             var found = false
             while (!found && k < as.length && as(k).ymin <= bs(j).ymax) {
-              if (xOverlapOwned(as(k), bs(j))) { pending = Pair(as(k).id, bs(j).id); found = true }
+              if (overlapOwned(as(k), bs(j))) { pending = Pair(as(k).id, bs(j).id); found = true }
               k += 1
             }
             if (!found) { j += 1; k = 0; anchorA = true } else return
@@ -377,72 +415,35 @@ object SpatialJoins {
     }
   }
 
-  /** The ONE cogroup join body shared by every partitioning scheme: replicate
-    * both sides with the scheme's `cellsOf`, cogroup on the cell key, run the
-    * sweep/STR inner loop, keep a pair iff the scheme's `ownerOf` maps its
-    * reference point to this key (exactly-once for any correct scheme).
-    */
-  private[graft] def cogroupSchemeJoin(a: Dataset[Geom], b: Dataset[Geom],
-                                       cellsOf: Geom => Seq[Long],
-                                       ownerOf: (Double, Double) => Long): DataFrame = {
-    val spark = a.sparkSession
-    import spark.implicits._
-    def rep(ds: Dataset[Geom]): Dataset[CellGeom] =
-      ds.flatMap(g => cellsOf(g).map(c => CellGeom(c, g.id, g.xmin, g.xmax, g.ymin, g.ymax)))
-    rep(a).groupByKey(_.cell).cogroup(rep(b).groupByKey(_.cell)) { (key, as, bs) =>
-      joinCellOwned(as.toArray, bs.toArray, (rx, ry) => ownerOf(rx, ry) == key)
-    }.toDF("a_id", "b_id")
-  }
-
-  /** PBSM grid join with the plane-sweep/STR inner loop. For a plain
-    * [[CellScheme]] the replication phase is DECLARATIVE (the same codegen'd
-    * `explode(cell_keys)` generator as [[gridJoin]]) followed by one
-    * `repartition(cell)` + partition-local sort + a run-grouping
-    * `mapPartitions` — object construction happens ONCE per row on the
-    * reduce side. The typed-cogroup body paid a per-row
-    * decode→Seq→CellGeom→re-encode round on the MAP side, which dominated
-    * the stripes/output-heavy benches (tune-measured: the two replication
-    * stages cost 2.5-6 s each at 10M rows vs ~1 s for the codegen'd form).
-    * Emits exactly the pair set of [[cogroupSchemeJoin]] (spec-asserted).
+  /** PBSM grid join with the plane-sweep/STR inner loop. The replication
+    * phase is DECLARATIVE (the same codegen'd `explode(cell_keys)` generator
+    * as [[gridJoin]]) followed by one `repartition(key)` + partition-local
+    * sort + a run-grouping `mapPartitions` — object construction happens
+    * ONCE per row, on the reduce side.
+    *
+    * POINT-side specialization (the stripes/dense twin of [[gridJoinPIP]]):
+    * a zero-extent side overlaps exactly one cell, so its map side is a
+    * plain PROJECTION (no generator). The evidence is the [[largeEvidence]]
+    * pass, so small inputs keep the generic plan shape with zero extra jobs.
+    * Every branch emits the identical pair set (a point's pair can only meet
+    * in the point's own cell, where the reference point — the point itself —
+    * trivially owns).
     */
   def gridJoinSweep(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame = {
-    // POINT-side specialization (the stripes/dense twin of [[gridJoinPIP]]):
-    // a zero-extent side overlaps exactly one cell, so its map side is a
-    // plain PROJECTION (no explode(cell_keys) generator) — the same
-    // max-edge evidence intersectJoin computes, measured here by one fused
-    // aggregation over both inputs. The aggregation is a data pass, so it is
-    // GATED on Catalyst stats (≳1M estimated rows): small inputs keep the
-    // r6 plan shape with zero extra jobs, large ones amortize the pass
-    // against the generator+shuffle work it removes. Every branch emits the
-    // identical pair set (ownership arithmetic is untouched; a point's pair
-    // can only meet in the point's own cell, where the reference point — the
-    // intersection's bottom-left corner = the point itself — trivially owns).
-    val est = math.max(estRowsFromStats(a), estRowsFromStats(b))
-    val (aPts, bPts) =
-      if (est < 1e6) (false, false)
-      else {
-        val u = a.toDF().withColumn("s", lit(0L))
-          .unionByName(b.toDF().withColumn("s", lit(1L)))
-        // abs(): an INVERTED row must not smuggle a side into the point plan
-        // (see intersectJoin's planning aggregation)
-        val edge = greatest(abs(col("xmax") - col("xmin")),
-                            abs(col("ymax") - col("ymin")))
-        val r = u.agg(max(when(col("s") === 0L, edge)),
-                      max(when(col("s") === 1L, edge))).head()
-        (!r.isNullAt(0) && r.getDouble(0) == 0.0,
-         !r.isNullAt(1) && r.getDouble(1) == 0.0)
-      }
-    gridJoinSweepHinted(a, b, s, aPts, bPts)
+    val ev = largeEvidence(a, b)
+    gridJoinSweepHinted(a, b, s, ev.exists(_.aPts), ev.exists(_.bPts))
   }
 
-  /** [[gridJoinSweep]] with the point-side evidence supplied by the caller
-    * (or the detection aggregation above) — routes the point side to the
-    * projection-only map form.
+  /** The keyed sweep/STR join of every partitioning scheme — grid, stripes,
+    * sort-tile, binary-split and adaptive cells: each side is keyed by the
+    * scheme (a point side, per the caller's evidence, by a projection), and
+    * a pair is kept in the run of the key `s.keyOf` assigns its reference
+    * point.
     */
   private[graft] def gridJoinSweepHinted(a: Dataset[Geom], b: Dataset[Geom],
-                                         s: CellScheme, aPts: Boolean,
+                                         s: KeyScheme, aPts: Boolean,
                                          bPts: Boolean): DataFrame =
-    keyedPartitionJoin(keyed(a, 0, s, aPts).unionByName(keyed(b, 1, s, bPts)), s.keyOf)
+    keyedPartitionJoin(keyed(a, 0, s, aPts).unionByName(keyed(b, 1, s, bPts)), s)
 
   /** The keyed union-frame rows `(key, side, id, xmin, xmax, ymin, ymax)` of
     * one side: one row per replicated key, or — for a point side (xmin ==
@@ -460,12 +461,10 @@ object SpatialJoins {
   /** Reduce side of the repartition+sort join: the pre-keyed union frame
     * `(key, side, id, xmin, xmax, ymin, ymax)` is hash-partitioned on the
     * key, sorted partition-locally, and consumed by a run-grouping iterator
-    * that feeds each key's two sides to the sweep/STR inner loop. `ownerOf`
-    * maps a reference point to its owning key — pairs are kept exactly once,
-    * in their owner key's run.
+    * that feeds each key's two sides to the sweep/STR inner loop. A pair is
+    * kept exactly once, in the run of the key `s` owns its reference point.
     */
-  private def keyedPartitionJoin(u0: DataFrame,
-                                 ownerOf: (Double, Double) => Long): DataFrame = {
+  private def keyedPartitionJoin(u0: DataFrame, s: KeyScheme): DataFrame = {
     val spark = u0.sparkSession
     import spark.implicits._
     val u = u0.repartition(col("key")).sortWithinPartitions("key", "side")
@@ -482,12 +481,12 @@ object SpatialJoins {
             val as = scala.collection.mutable.ArrayBuffer.empty[CellGeom]
             val bs = scala.collection.mutable.ArrayBuffer.empty[CellGeom]
             while (cur != null && cur.key == cellKey) {
-              val g = CellGeom(cellKey, cur.id, cur.xmin, cur.xmax, cur.ymin, cur.ymax)
+              val g = CellGeom(cur.id, cur.xmin, cur.xmax, cur.ymin, cur.ymax)
               if (cur.side == 0) as += g else bs += g
               cur = if (rows.hasNext) rows.next() else null
             }
             inner = joinCellOwned(as.toArray, bs.toArray,
-              (rx, ry) => ownerOf(rx, ry) == cellKey)
+              (rx, ry) => s.keyOf(rx, ry) == cellKey)
           }
         }
         def hasNext: Boolean = { fill(); inner.hasNext }
@@ -503,31 +502,14 @@ object SpatialJoins {
   /** Physical-plan routing for a stripe scheme (r6 verdict item 2: stripes
     * never reached the point specialization — the reference's tuned
     * 1,000-stripe Uniform PIP best was 2.05× ours). Small inputs (Catalyst
-    * stats, no job) keep the r6 declarative grid plan unchanged; large ones
-    * pay ONE fused planning aggregation (the intersectJoin evidence: per-side
-    * max MBR edge) and route a point side to [[gridJoinPIP]], or — when
-    * stripes run dense, where the declarative per-stripe SMJ loop is
-    * quadratic — to the sweep/STR cogroup body with the projection-only
-    * point form ([[gridJoinSweepHinted]]). Identical pair set on every path.
+    * stats, no job) keep the declarative grid plan; large ones pay the one
+    * [[largeEvidence]] pass and take the [[route]] ladder: dense stripes (the
+    * larger side over the stripe count), where the declarative per-stripe
+    * SMJ loop is quadratic, to the keyed sweep/STR join; a point side to
+    * [[gridJoinPIP]]. Identical pair set on every path.
     */
-  private def stripesRouted(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame = {
-    val est = math.max(estRowsFromStats(a), estRowsFromStats(b))
-    if (est < 1e6) return gridJoin(a, b, s)
-    val u = a.toDF().withColumn("s", lit(0L))
-      .unionByName(b.toDF().withColumn("s", lit(1L)))
-    val edge = greatest(abs(col("xmax") - col("xmin")),
-                        abs(col("ymax") - col("ymin")))
-    val r = u.agg(max(when(col("s") === 0L, edge)),
-                  max(when(col("s") === 1L, edge)), count(lit(1))).head()
-    val aPts = !r.isNullAt(0) && r.getDouble(0) == 0.0
-    val bPts = !r.isNullAt(1) && r.getDouble(1) == 0.0
-    val perCellEst = r.getLong(2).toDouble / (2.0 * s.numCells)
-    if (perCellEst > 256.0) gridJoinSweepHinted(a, b, s, aPts, bPts)
-    else if (aPts) gridJoinPIP(a, b, s)
-    else if (bPts)
-      gridJoinPIP(b, a, s).select(col("b_id").as("a_id"), col("a_id").as("b_id"))
-    else gridJoin(a, b, s)
-  }
+  private def stripesRouted(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme): DataFrame =
+    largeEvidence(a, b).fold(gridJoin(a, b, s))(route(a, b, s, _))
 
   /** Stripe-direction choice (the reference records `best_join_direction` per
     * workload and picks the better of partition-dim0 vs the transpose,
@@ -561,13 +543,10 @@ object SpatialJoins {
     * intersect join; the variant is a refinement filter.
     */
   def gridJoinPred(a: Dataset[Geom], b: Dataset[Geom], s: CellScheme,
-                   pred: Column): DataFrame = {
-    val ac = withCells(prefixed(a, "a"), s, "a")
-    val bc = withCells(prefixed(b, "b"), s, "b").withColumnRenamed("cell", "b_cell")
-    ac.join(bc, col("cell") === col("b_cell") && intersectPred && ownsPred(s, col("cell")))
+                   pred: Column): DataFrame =
+    candidates(withCells(prefixed(a, "a"), s, "a"), bReplicated(b, s), s)
       .filter(pred)
       .select(col("a_id"), col("b_id"))
-  }
 
   /** Salted grid join for degenerate hot cells (e.g. many identical points):
     * the a-side of every cell is hashed into `salt` buckets; the b-side is
@@ -580,7 +559,7 @@ object SpatialJoins {
     require(salt >= 1)
     val ac = withCells(prefixed(a, "a"), s, "a")
       .withColumn("skey", col("cell") * salt + pmod(xxhash64(col("a_id")), lit(salt.toLong)))
-    val bc = withCells(prefixed(b, "b"), s, "b").withColumnRenamed("cell", "b_cell")
+    val bc = bReplicated(b, s)
       .withColumn("bucket", explode(typedLit((0L until salt).toArray)))
       .withColumn("b_skey", col("b_cell") * salt + col("bucket"))
     ac.join(bc, col("skey") === col("b_skey") && intersectPred && ownsPred(s, col("cell")))
@@ -591,12 +570,12 @@ object SpatialJoins {
     * `PartitionedSpatialJoin.scala:151-165`): data-quantile tile boundaries
     * ([[graft.cells.SortTileScheme]]) instead of a uniform lattice — equal
     * per-tile load under skew by construction rather than by reactive
-    * splitting. Same cogroup + sweep/STR inner loop, same reference-point
-    * exactly-once rule, so the pair set is identical to every other scheme.
+    * splitting. Same keyed sweep/STR join, same reference-point exactly-once
+    * rule, so the pair set is identical to every other scheme.
     */
   def sortTileJoin(a: Dataset[Geom], b: Dataset[Geom],
                    scheme: graft.cells.SortTileScheme): DataFrame =
-    cogroupSchemeJoin(a, b, scheme.cellsOf, scheme.cellOf)
+    gridJoinSweepHinted(a, b, scheme, aPts = false, bPts = false)
 
   /** Convenience: build the scheme from a sample, then join. For benchmarks
     * or repeated joins build once and call the scheme overload.
@@ -607,11 +586,11 @@ object SpatialJoins {
 
   /** Binary-split-partitioned join (the reference's SpatialSpark BSP method):
     * kd-tree leaves from sampled medians ([[graft.cells.BinarySplitScheme]]);
-    * same cogroup inner loop and exactly-once rule as every scheme.
+    * same keyed sweep/STR join and exactly-once rule as every scheme.
     */
   def binarySplitJoin(a: Dataset[Geom], b: Dataset[Geom],
                       scheme: graft.cells.BinarySplitScheme): DataFrame =
-    cogroupSchemeJoin(a, b, scheme.cellsOf, scheme.cellOf)
+    gridJoinSweepHinted(a, b, scheme, aPts = false, bPts = false)
 
   def binarySplitJoin(a: Dataset[Geom], b: Dataset[Geom], extent: Extent,
                       depth: Int): DataFrame =
@@ -619,7 +598,7 @@ object SpatialJoins {
 
   /** PBSM with adaptive hot-cell refinement (reference J6's quadtree budget
     * rule, see [[graft.skew.AdaptiveCells]]): plan splits from per-cell
-    * counts, then one cogroup on the packed two-level key.
+    * counts, then the keyed sweep/STR join on the packed two-level key.
     */
   def gridJoinAdaptive(a: Dataset[Geom], b: Dataset[Geom], base: CellScheme,
                        budgetPairs: Long = 4L * 1024 * 1024,
@@ -632,9 +611,8 @@ object SpatialJoins {
       sampleFraction = planSampleFraction)
     if (scheme.splits.isEmpty) {
       // zero hot cells → the two-level key degenerates to the plain grid, so
-      // return the plain-grid PLAN instead of paying the typed-cogroup
-      // serialization for nothing (on even density the insurance premium is
-      // now just the one sampled planning pass). Inner-loop routing uses the
+      // return the plain-grid PLAN (on even density the insurance premium is
+      // just the one sampled planning pass). Inner-loop routing uses the
       // MEASURED occupied-cell mean the planning aggregation already
       // computed (the Catalyst byte-stats estimate sits exactly on the
       // 256 boundary for the bench workloads and routes dense cells into the
@@ -643,14 +621,8 @@ object SpatialJoins {
       val perCellEst =
         if (scheme.perCellMean >= 0.0) scheme.perCellMean
         else math.max(estRowsFromStats(a), estRowsFromStats(b)) / base.numCells.toDouble
-      if (perCellEst > 256.0) gridJoinSweep(a, b, base) else gridJoin(a, b, base)
-    } else {
-      // declarative two-level replication (one `cell_keys` generator over
-      // the adaptive scheme) + the same repartition+sort reduce as
-      // gridJoinSweep — the map side stays in whole-stage codegen
-      keyedPartitionJoin(keyed(a, 0, scheme, pts = false)
-        .unionByName(keyed(b, 1, scheme, pts = false)), scheme.ownerKey)
-    }
+      if (perCellEst > DenseCellRows) gridJoinSweep(a, b, base) else gridJoin(a, b, base)
+    } else gridJoinSweepHinted(a, b, scheme, aPts = false, bPts = false)
   }
 
   // ---- distance join --------------------------------------------------------
@@ -688,7 +660,7 @@ object SpatialJoins {
       .withColumn("a_ymin", col("a_ymin") - lit(r)).withColumn("a_ymax", col("a_ymax") + lit(r))
     val ac = withCells(ac0, s, "a")
     // candidate = expanded-MBR intersect; dedup by ownership on the expanded pair
-    ac.join(bc, col("cell") === col("b_cell") && intersectPred && ownsPred(s, col("cell")))
+    candidates(ac, bc, s)
       .withColumn("a_xmin", col("a_oxmin")).withColumn("a_xmax", col("a_oxmax"))
       .withColumn("a_ymin", col("a_oymin")).withColumn("a_ymax", col("a_oymax"))
       .withColumn("dist", minDistCol)

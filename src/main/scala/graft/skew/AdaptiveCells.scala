@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * exceeds the budget are split into an `s × s` local subgrid (one-shot,
   * `s` sized so the expected per-subcell product lands under budget). The
   * final join key packs (base cell, subcell) into one Long, so the downstream
-  * plan is still a single equi-join/cogroup — skew handling never adds a
+  * plan is still a single equi-join/keyed join — skew handling never adds a
   * shuffle. Min subcell size is clamped to the sampled median object extent
   * (`partition_utils.hpp:226-277` semantics) to bound replication blow-up.
   */
@@ -49,7 +49,7 @@ final case class AdaptiveScheme(base: CellScheme, splits: Map[Long, Int],
     math.max(0, math.min(i, s - 1))
   }
 
-  def ownerKey(x: Double, y: Double): Long = {
+  def keyOf(x: Double, y: Double): Long = {
     val c = base.cellOf(x, y)
     splitOf(c) match {
       case 0 => c << SubBits
@@ -62,8 +62,6 @@ final case class AdaptiveScheme(base: CellScheme, splits: Map[Long, Int],
         (c << SubBits) | (1L + sy.toLong * s + sx)
     }
   }
-
-  def keyOf(x: Double, y: Double): Long = ownerKey(x, y)
 
   /** Walks the keys of an MBR: counts them, and stores them into `out`
     * unless it is null (count pass, then fill pass — one array per row).
@@ -119,12 +117,6 @@ final case class AdaptiveScheme(base: CellScheme, splits: Map[Long, Int],
   }
 
   def describe: String = s"${base.describe}, ${splits.size} split cells"
-
-  /** All final keys overlapped by an MBR ([[keys]]). */
-  def keysOf(g: Geom): Seq[Long] = keys(g.xmin, g.xmax, g.ymin, g.ymax).toLongArray.toSeq
-
-  def owns(key: Long, a: Geom, b: Geom): Boolean =
-    ownerKey(math.max(a.xmin, b.xmin), math.max(a.ymin, b.ymin)) == key
 }
 
 /** One planning task's sampled replica rows: `(cell, w, h)` of at most the

@@ -141,6 +141,6 @@ object TreeBin {
     * serialization of a static side / a cell's contents).
     */
   def buildTree(geoms: Array[Geom], leafSize: Int = 16): STRTree =
-    STRTree.build(geoms.map(g => CellGeom(0L, g.id, g.xmin, g.xmax, g.ymin, g.ymax)),
+    STRTree.build(geoms.map(g => CellGeom(g.id, g.xmin, g.xmax, g.ymin, g.ymax)),
       leafSize)
 }

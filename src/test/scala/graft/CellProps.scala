@@ -1,6 +1,6 @@
 package graft
 
-import graft.cells.{CellKeys, CellScheme, KeyScheme}
+import graft.cells.{BinarySplitScheme, CellKeys, CellScheme, KeyScheme, SortTileScheme}
 import graft.geom.{Extent, Geom}
 import graft.skew.AdaptiveScheme
 import org.apache.spark.sql.catalyst.InternalRow
@@ -12,12 +12,14 @@ import org.scalacheck.Prop.propBoolean
 /** Property-based invariants of the cell index (pure JVM, no Spark):
   * for every intersecting pair, exactly one candidate cell owns it, and the
   * owner is always in both replication sets — the exactly-once contract the
-  * whole engine rests on (reference-point dedup, SURVEY.md §7.4).
+  * whole engine rests on (reference-point dedup, SURVEY.md §7.4) — for every
+  * [[KeyScheme]] and for inverted rows (max < min on an axis) too.
   */
 object CellProps extends Properties("cells") {
 
   private val coord = Gen.chooseNum(-20.0, 120.0)
-  private val len = Gen.chooseNum(0.0, 40.0)
+  // one row in four is inverted on the axis (max < min)
+  private val len = Gen.frequency(3 -> Gen.chooseNum(0.0, 40.0), 1 -> Gen.chooseNum(-40.0, 0.0))
 
   private val geomGen: Gen[Geom] = for {
     x <- coord; y <- coord; w <- len; h <- len; id <- Gen.chooseNum(0L, 1L << 40)
@@ -27,19 +29,42 @@ object CellProps extends Properties("cells") {
     nx <- Gen.chooseNum(1, 19); ny <- Gen.chooseNum(1, 19)
   } yield CellScheme(Extent(0, 100, 0, 100), nx, ny)
 
+  /** Sorted boundaries, some on round values and repeated. */
+  private def bounds(n: Int, coord: Gen[Double]): Gen[Array[Double]] =
+    Gen.listOfN(n, Gen.frequency(3 -> coord, 1 -> Gen.oneOf(0.0, 50.0, 100.0)))
+      .map(_.sorted.toArray)
+
+  /** Sort-tile schemes with arbitrary (not sample-quantile) boundaries. */
+  private def sortTileGen(coord: Gen[Double]): Gen[SortTileScheme] = for {
+    sx <- Gen.chooseNum(1, 6); sy <- Gen.chooseNum(1, 6)
+    xb <- bounds(sx - 1, coord); yb <- Gen.listOfN(sx, bounds(sy - 1, coord))
+  } yield SortTileScheme(Extent(0, 100, 0, 100), xb, yb.toArray)
+
+  /** Binary-split schemes with arbitrary split axes and positions (a leaf
+    * may cover an empty region).
+    */
+  private def binarySplitGen(coord: Gen[Double]): Gen[BinarySplitScheme] = for {
+    depth <- Gen.chooseNum(0, 4)
+    axis <- Gen.listOfN((1 << depth) - 1, Gen.oneOf(true, false))
+    at <- Gen.listOfN((1 << depth) - 1, coord)
+  } yield BinarySplitScheme(Extent(0, 100, 0, 100), depth, axis.toArray, at.toArray)
+
+  private val anySchemeGen: Gen[KeyScheme] =
+    Gen.oneOf(schemeGen, sortTileGen(coord), binarySplitGen(coord))
+
   property("exactly-once ownership among shared candidate cells") =
-    Prop.forAll(geomGen, geomGen, schemeGen) { (a, b, s) =>
+    Prop.forAll(geomGen, geomGen, anySchemeGen) { (a, b, s) =>
       !a.intersects(b) || {
-        val shared = s.cellsOf(a).toSet intersect s.cellsOf(b).toSet
+        val shared = s.keysOf(a).toSet intersect s.keysOf(b).toSet
         shared.count(c => s.owns(c, a, b)) == 1
       }
     }
 
   property("owner cell of any point is in the replication set") =
-    Prop.forAll(geomGen, schemeGen) { (g, s) =>
+    Prop.forAll(geomGen, anySchemeGen) { (g, s) =>
       val cx = math.min(math.max(g.centerX, g.xmin), g.xmax)
       val cy = math.min(math.max(g.centerY, g.ymin), g.ymax)
-      s.cellsOf(g).contains(s.cellOf(cx, cy))
+      s.keysOf(g).contains(s.keyOf(cx, cy))
     }
 
   private val splitsGen: Gen[Map[Long, Int]] = Gen.mapOf(for {
@@ -100,6 +125,8 @@ object CellProps extends Properties("cells") {
 
   private val keySchemeGen: Gen[KeyScheme] = Gen.oneOf(
     schemeGen,
+    sortTileGen(Gen.chooseNum(-20.0, 120.0)),
+    binarySplitGen(Gen.chooseNum(-20.0, 120.0)),
     Gen.chooseNum(1, 19).map(n => CellScheme.stripesX(hostileExt, n)),
     Gen.chooseNum(1, 19).map(n => CellScheme.stripesY(hostileExt, n)),
     splitsGen.map(sp => AdaptiveScheme(CellScheme(hostileExt, 5, 5), sp + (12L -> 3))),
@@ -124,10 +151,21 @@ object CellProps extends Properties("cells") {
   private def row(r: Seq[Option[Double]]) =
     InternalRow.fromSeq(r.map(_.map(Double.box).orNull))
 
+  /** Sort-tile and binary-split cells have no declarative replication to
+    * compare with: for them the interpreted, codegen'd and `keysOf` results
+    * must agree.
+    */
   property("cell_keys == the explode(sequence) replication on hostile rows") =
     Prop.forAll(keySchemeGen, Gen.listOfN(4, hostileCoord)) { (scheme, r) =>
       val e = CellKeys(scheme, inputs(0), inputs(1), inputs(2), inputs(3))
-      val want = declarative(scheme, r).sorted
+      val jvm = if (r.exists(_.isEmpty)) Nil else {
+        val Seq(x0, x1, y0, y1) = r.map(_.get)
+        scheme.keysOf(Geom(0, x0, x1, y0, y1)).sorted
+      }
+      val want = scheme match {
+        case _: CellScheme | _: AdaptiveScheme => declarative(scheme, r).sorted
+        case _ => jvm
+      }
       def sortedKeys(a: org.apache.spark.sql.catalyst.util.ArrayData): Seq[Long] =
         if (a == null) Nil else a.toLongArray().toSeq.sorted
       val interpreted = sortedKeys(e.eval(row(r)).asInstanceOf[
@@ -136,16 +174,8 @@ object CellProps extends Properties("cells") {
         val out = UnsafeProjection.create(Seq(e)).apply(row(r))
         if (out.isNullAt(0)) Nil else sortedKeys(out.getArray(0))
       }
-      val jvm = if (r.exists(_.isEmpty)) Nil else {
-        val Seq(x0, x1, y0, y1) = r.map(_.get)
-        val g = Geom(0, x0, x1, y0, y1)
-        (scheme match {
-          case s: CellScheme => s.cellsOf(g)
-          case a: AdaptiveScheme => a.keysOf(g)
-        }).sorted
-      }
       (interpreted == want) :| s"interpreted $interpreted != $want" &&
         (generated == want) :| s"generated $generated != $want" &&
-        (jvm == want) :| s"cellsOf/keysOf $jvm != $want"
+        (jvm == want) :| s"keysOf $jvm != $want"
     }
 }

@@ -244,13 +244,13 @@ class R2OpsSpec extends AnyFunSuite {
     val bsp = SpatialJoins.binarySplitJoin(a, b, ext, 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(bsp == grid && grid.nonEmpty)
-    // every point owned by exactly one leaf, and the leaf is in cellsOf
+    // every point owned by exactly one leaf, and the leaf is in keysOf
     val s = graft.cells.BinarySplitScheme.build(a, b, ext, 4)
     (1 to 500).foreach { _ =>
       val x = rnd.nextDouble() * 100; val y = rnd.nextDouble() * 100
-      val c = s.cellOf(x, y)
+      val c = s.keyOf(x, y)
       assert(c >= 0 && c < s.numLeaves)
-      assert(s.cellsOf(graft.geom.Geom(0, x, x, y, y)) == Seq(c))
+      assert(s.keysOf(graft.geom.Geom(0, x, x, y, y)) == Seq(c))
     }
   }
 

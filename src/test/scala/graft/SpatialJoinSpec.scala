@@ -37,7 +37,7 @@ class GeomSpec extends AnyFunSuite {
       }
       val a = g(); val b = g()
       if (a.intersects(b)) {
-        val owners = (s.cellsOf(a).toSet intersect s.cellsOf(b).toSet)
+        val owners = (s.keysOf(a).toSet intersect s.keysOf(b).toSet)
           .count(c => s.owns(c, a, b))
         assert(owners == 1, s"expected exactly one owner cell for $a × $b")
       }

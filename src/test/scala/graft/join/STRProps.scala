@@ -16,7 +16,7 @@ object STRProps extends Properties("str") {
     w <- Gen.oneOf(Gen.const(0.0), Gen.chooseNum(0.0, 25.0))
     h <- Gen.oneOf(Gen.const(0.0), Gen.chooseNum(0.0, 25.0))
     id <- Gen.chooseNum(0L, 1000000L)
-  } yield CellGeom(0L, id, x, x + w, y, y + h)
+  } yield CellGeom(id, x, x + w, y, y + h)
 
   property("query == brute-force intersect set") =
     Prop.forAll(Gen.listOfN(150, geomGen), Gen.listOfN(40, geomGen)) { (items, probes) =>

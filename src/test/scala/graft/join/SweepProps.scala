@@ -13,10 +13,11 @@ object SweepProps extends Properties("sweep") {
 
   private val geomGen: Gen[CellGeom] = for {
     x <- Gen.chooseNum(0.0, 50.0); y <- Gen.chooseNum(0.0, 50.0)
-    w <- Gen.oneOf(Gen.const(0.0), Gen.chooseNum(0.0, 25.0))
-    h <- Gen.oneOf(Gen.const(0.0), Gen.chooseNum(0.0, 25.0))
+    // negative widths/heights: inverted rows (max < min) on either axis
+    w <- Gen.oneOf(Gen.const(0.0), Gen.chooseNum(-25.0, 25.0))
+    h <- Gen.oneOf(Gen.const(0.0), Gen.chooseNum(-25.0, 25.0))
     id <- Gen.chooseNum(0L, 1000000L)
-  } yield CellGeom(0L, id, x, x + w, y, y + h)
+  } yield CellGeom(id, x, x + w, y, y + h)
 
   private val sideGen: Gen[List[CellGeom]] = Gen.listOfN(40, geomGen)
 
