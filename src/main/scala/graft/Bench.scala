@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def session(cores: Int): SparkSession = {
+  private[graft] def session(cores: Int): SparkSession = {
     // RAM-backed shuffle dirs: a single sandbox disk is shared across all
     // "executors"; on a real cluster each node has its own NVMe, so the
     // per-node-scratch assumption is emulated with /dev/shm (documented in
@@ -160,7 +160,7 @@ object Bench {
     def bsp()   = time { SpatialJoins.binarySplitJoin(a, b, ext, 9).count() }
     // SAME base grid as the sweep row (a different base grid would conflate
     // the gate with grid choice). The concentration gate limits splits to
-    // the few dominant gaussian-center cells (Tune adaptplan: 43 of ~19.6k
+    // the few dominant gaussian-center cells (round-7 profile: 43 of ~19.6k
     // occupied at 10M — each holding > 4·parallelism× the balanced share;
     // the r6 per-cell median clamp re-enables these, where r5's global
     // clamp vetoed them), so the row's premium over the sweep is the
@@ -197,7 +197,7 @@ object Bench {
     * together in one apparent load window and the protocol could not prove
     * it). A sentinel far off its ~baseline marks the phase's numbers suspect.
     */
-  private def sentinelSec(spark: SparkSession): Double =
+  private[graft] def sentinelSec(spark: SparkSession): Double =
     // bounded summand: 2^31 rows of id % p sum to ~2^50 — id*id would
     // overflow int64 under ANSI after ~2^31 terms
     time { spark.range(0, 1L << 31, 1, 32).selectExpr("sum(id % 1000003)").head() }._1
@@ -234,7 +234,7 @@ object Bench {
     }
   }
 
-  private def timedWithShuffle[T](spark: SparkSession)(f: => T): (Double, Long, T) = {
+  private[graft] def timedWithShuffle[T](spark: SparkSession)(f: => T): (Double, Long, T) = {
     val l = new ShuffleBytes
     spark.sparkContext.addSparkListener(l)
     val (sec, r) = time(f)
@@ -480,10 +480,12 @@ object Bench {
 
   private def jArr(xs: Seq[Double]): String = xs.mkString("[", ",", "]")
 
+  /** Cores of the `local[N]` session (`SPARK_GRAFT_CPUS`, else the host's, at most 32). */
+  private[graft] def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    math.min(32, Runtime.getRuntime.availableProcessors()).toString).toInt
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString).toInt
     val benchN = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "10000000").toLong
 
     // ---- phase 1: per-query timings at full parallelism -------------------
@@ -729,7 +731,7 @@ object Bench {
          |(`spatial_bucketed_join`, plan asserted Exchange-free in
          |BucketedJoinSpec) eliminate the join's Exchange entirely — on this
          |one-box sandbox with RAM-backed shuffle that exchange costs only
-         |~0.4 s at 10M (`Tune … bucketed`: one-off shuffle join 2.16 s vs
+         |~0.4 s at 10M (a round-7 A/B: one-off shuffle join 2.16 s vs
          |bucketed join 2.55 s reading parquet instead of cache), so the win
          |is structural (zero network bytes on a real cluster), not local
          |walltime.

@@ -411,11 +411,7 @@ object SparkEntry {
       // hint("merge") forces the sort-merge path even at oracle-test sizes
       // (a broadcast would also be shuffle-free but proves nothing about the
       // bucketed layout a 100 TB static side relies on)
-      ac.hint("merge").join(bc,
-          col("cell") === col("b_cell") && SpatialJoins.intersectPred &&
-            SpatialJoins.cellOfCol(grid, greatest(col("a_xmin"), col("b_xmin")),
-              greatest(col("a_ymin"), col("b_ymin"))) === col("cell"))
-        .select(col("a_id"), col("b_id"))
+      SpatialJoins.candidates(ac.hint("merge"), bc, grid).select(col("a_id"), col("b_id"))
     }),
     // SQL surface: st_within / st_dwithin joins, same rewrite (predicate
     // refinement rides on the cell candidate phase)
@@ -515,7 +511,8 @@ object SparkEntry {
          | CAST(round(min(ymin) * 100) AS BIGINT) AS ymin_c,
          | CAST(round(max(ymax) * 100) AS BIGINT) AS ymax_c
          | FROM (${partRects.sqlSelect})""".stripMargin.replace("\n", ""),
-    "spatial_cell_stats" -> cellStatsOracle,
+    "spatial_cell_stats" ->
+      s"SELECT cell, count(*) AS n_objs FROM (${cellRepSql(partRects)}) GROUP BY 1",
     "spatial_cell_result_stats" -> {
       def cc(v: String, len: Double, nn: Int): String =
         s"least(greatest(CAST(floor($v / $len) AS BIGINT), 0), ${nn - 1})"
@@ -528,7 +525,7 @@ object SparkEntry {
     "spatial_topk_capped" ->
       (s"SELECT a.id AS a_id, b.id AS b_id FROM (${partRects.sqlSelect}) a " +
         s"JOIN (${ordersRects.sqlSelect}) b ON $intersectSql ORDER BY 1, 2 LIMIT 100"),
-    "spatial_tile_assignments" -> tileAssignOracle,
+    "spatial_tile_assignments" -> cellRepSql(partRects),
     "spatial_tile_coarsen" ->
       (s"SELECT DISTINCT id, ((cell // ${grid.nx}) // 4) * ${grid.nx / 4} + " +
         s"((cell % ${grid.nx}) // 4) AS parent_cell FROM (${cellRepSql(partRects)})"),
@@ -712,26 +709,7 @@ object SparkEntry {
        |)""".stripMargin.replace("\n", "")
   }
 
-  private def tileAssignOracle: String = cellRepSql(partRects)
-
   private def coverageSql(spec: graft.api.RectSpec): String =
     s"SELECT cell, cell % ${grid.nx} AS cx, cell // ${grid.nx} AS cy, " +
       s"count(*) AS value FROM (${cellRepSql(spec)}) GROUP BY 1, 2, 3"
-
-  /** Cell replication as SQL: cross join with the two cell-range sequences.
-    * Must mirror `SpatialJoins.withCells` (clamped floor arithmetic).
-    */
-  private def cellStatsOracle: String = {
-    val w = grid.cellW; val h = grid.cellH; val n = grid.nx
-    def cc(v: String, lo: Double, len: Double, nn: Int): String =
-      s"least(greatest(CAST(floor(($v - $lo) / $len) AS BIGINT), 0), ${nn - 1})"
-    s"""SELECT cy * $n + cx AS cell, count(*) AS n_objs FROM (
-       | SELECT unnest(range(${cc("xmin", 0.0, w, n)}, ${cc("xmax", 0.0, w, n)} + 1)) AS cx,
-       |        cy
-       | FROM (
-       |   SELECT xmin, xmax, unnest(range(${cc("ymin", 0.0, h, n)}, ${cc("ymax", 0.0, h, n)} + 1)) AS cy
-       |   FROM (${partRects.sqlSelect})
-       | )
-       |) GROUP BY 1""".stripMargin.replace("\n", "")
-  }
 }

@@ -81,22 +81,6 @@ final case class CellScheme(extent: Extent, nx: Int, ny: Int) extends KeyScheme 
 }
 
 object CellScheme {
-  /** Morton (Z-order) interleave of two 16-bit cell coordinates — the
-    * storage-layout key: sorting a spatial table by z-order clusters
-    * spatially-near cells into the same files/row-groups, so cell-range
-    * scans prune (the standard lakehouse data-layout technique; pure bit
-    * arithmetic, replayable in any SQL engine).
-    */
-  def zOrder(cx: Long, cy: Long): Long = {
-    var z = 0L
-    var b = 0
-    while (b < 16) {
-      z |= ((cx >> b) & 1L) << (2 * b)
-      z |= ((cy >> b) & 1L) << (2 * b + 1)
-      b += 1
-    }
-    z
-  }
   /** Pick a grid so the average cell holds ~`targetPerCell` objects of the
     * larger side — the analogue of the reference's "BFS until ≥ 10×threads
     * tasks" granularity rule (`cpp/RTree.h:506-508`): #cells ≫ #cores.

@@ -79,15 +79,6 @@ object SpatialJoins {
   val containsSql =
     "b.xmin >= a.xmin AND b.xmax <= a.xmax AND b.ymin >= a.ymin AND b.ymax <= a.ymax"
 
-  /** Global extent via a single min/max aggregation (reference A2). */
-  def extentOf(ds: Dataset[Geom]): Extent = {
-    val r = ds.agg(min("xmin"), max("xmax"), min("ymin"), max("ymax")).head()
-    Extent(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
-  }
-
-  def jointExtent(a: Dataset[Geom], b: Dataset[Geom]): Extent =
-    extentOf(a.unionByName(b))
-
   private def prefixed(ds: Dataset[Geom], p: String): DataFrame =
     ds.toDF(s"${p}_id", s"${p}_xmin", s"${p}_xmax", s"${p}_ymin", s"${p}_ymax")
 
@@ -163,25 +154,33 @@ object SpatialJoins {
                                     aPts: Boolean, bPts: Boolean)
 
   /** The one planning aggregation: a single job over both inputs, or None
-    * when both are empty (the min/max aggregate returns nulls). An all-zero
-    * max edge marks a POINT side, which routes to the no-replication /
-    * no-ownership PIP plan at zero extra jobs. abs() because an INVERTED row
-    * (max < min on an axis) is no point: x (5,3) × y [0,10] intersects
-    * [0,10]² under the inclusive predicate, so it must not hide behind a
-    * zero other edge and smuggle its side into the PIP plan, which would
-    * treat it as its (xmin, ymin) corner.
+    * when both are empty. The extent is taken over FINITE coordinates only:
+    * one ±Inf would make the cell width infinite and one NaN (Spark's `max`
+    * orders it above every number) would make it NaN, and either collapses
+    * the whole axis into one cell. Rows outside the extent clamp into edge
+    * cells, so any extent keeps the pair set exact; an axis with no finite
+    * bound gets the unit interval. An all-zero max edge marks a POINT side,
+    * which routes to the no-replication / no-ownership PIP plan at zero
+    * extra jobs. abs() because an INVERTED row (max < min on an axis) is no
+    * point: x (5,3) × y [0,10] intersects [0,10]² under the inclusive
+    * predicate, so it must not hide behind a zero other edge and smuggle its
+    * side into the PIP plan, which would treat it as its (xmin, ymin) corner.
     */
   private def evidence(a: Dataset[Geom], b: Dataset[Geom]): Option[Evidence] = {
     val u = a.toDF().withColumn("s", lit(0L))
       .unionByName(b.toDF().withColumn("s", lit(1L)))
+    def finite(c: String): Column = when(col(c).between(-Double.MaxValue, Double.MaxValue), col(c))
     val edge = greatest(abs(col("xmax") - col("xmin")),
                         abs(col("ymax") - col("ymin")))
-    val r = u.agg(min("xmin"), max("xmax"), min("ymin"), max("ymax"),
+    val r = u.agg(min(finite("xmin")), max(finite("xmax")), min(finite("ymin")), max(finite("ymax")),
       count(when(col("s") === 0L, lit(1))), count(lit(1)),
       max(when(col("s") === 0L, edge)),
       max(when(col("s") === 1L, edge))).head()
-    if (r.isNullAt(0)) None
-    else Some(Evidence(Extent(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)),
+    def axis(lo: Int, hi: Int): (Double, Double) =
+      if (r.isNullAt(lo) || r.isNullAt(hi)) (0.0, 1.0) else (r.getDouble(lo), r.getDouble(hi))
+    val (x0, x1) = axis(0, 1); val (y0, y1) = axis(2, 3)
+    if (r.getLong(5) == 0L) None
+    else Some(Evidence(Extent(x0, x1, y0, y1),
       r.getLong(4), r.getLong(5) - r.getLong(4),
       aPts = !r.isNullAt(6) && r.getDouble(6) == 0.0,
       bPts = !r.isNullAt(7) && r.getDouble(7) == 0.0))
@@ -242,7 +241,7 @@ object SpatialJoins {
     * ([[bReplicated]]), kept iff the MBRs intersect and the cell owns the
     * pair's reference point.
     */
-  private def candidates(ac: DataFrame, bc: DataFrame, s: CellScheme): DataFrame =
+  private[graft] def candidates(ac: DataFrame, bc: DataFrame, s: CellScheme): DataFrame =
     ac.join(bc, col("cell") === col("b_cell") && intersectPred && ownsPred(s, col("cell")))
 
   /** PBSM grid join as a pure Catalyst plan (equi-join on cell). */
@@ -280,15 +279,27 @@ object SpatialJoins {
     *    cell), making the join exactly-once by construction;
     *  - a narrower shuffle row: `(id, x, y)` instead of the 4-double MBR.
     */
-  def gridJoinPIP(pts: Dataset[Geom], polys: Dataset[Geom], s: CellScheme): DataFrame = {
-    val a = pts.toDF().select(col("id").as("a_id"),
-      col("xmin").as("a_x"), col("ymin").as("a_y"),
-      cellOfCol(s, col("xmin"), col("ymin")).as("cell"))
-    a.join(bReplicated(polys, s), col("cell") === col("b_cell") &&
-        col("a_x") >= col("b_xmin") && col("a_x") <= col("b_xmax") &&
-        col("a_y") >= col("b_ymin") && col("a_y") <= col("b_ymax"))
+  def gridJoinPIP(pts: Dataset[Geom], polys: Dataset[Geom], s: CellScheme): DataFrame =
+    pointCandidates(pts.toDF().select(
+        col("id").as("a_id") +: pointCols(s, col("xmin"), col("ymin")): _*), polys, s)
       .select(col("a_id"), col("b_id"))
-  }
+
+  /** A point side's columns: the point `(a_x, a_y)` and its owner `cell`,
+    * a plain projection.
+    */
+  private[graft] def pointCols(s: CellScheme, x: Column, y: Column): Seq[Column] =
+    Seq(x.as("a_x"), y.as("a_y"), cellOfCol(s, x, y).as("cell"))
+
+  /** The candidate join of the point plans: point rows ([[pointCols]])
+    * equi-joined on the cell with the replicated rects, kept iff the point
+    * lies in the rect. No ownership filter: the pair meets only in the
+    * point's own cell.
+    */
+  private[graft] def pointCandidates(pts: DataFrame, polys: Dataset[Geom],
+                                     s: CellScheme): DataFrame =
+    pts.join(bReplicated(polys, s), col("cell") === col("b_cell") &&
+      col("a_x") >= col("b_xmin") && col("a_x") <= col("b_xmax") &&
+      col("a_y") >= col("b_ymin") && col("a_y") <= col("b_ymax"))
 
   /** [[gridJoin]] with an explicit join-strategy hint on the b side
     * ("shuffle_hash" avoids the SMJ sorts; "broadcast" removes the shuffle
@@ -685,8 +696,7 @@ object SpatialJoins {
     * in O(log(extent/r0)) rounds with bounded driver work.
     */
   def knnJoinWithRounds(a: Dataset[Geom], b: Dataset[Geom], extent: Extent, k: Int,
-                        bCountHint: Long = -1L,
-                        reuseBRep: Boolean = true): (DataFrame, Int) = {
+                        bCountHint: Long = -1L): (DataFrame, Int) = {
     val spark = a.sparkSession
     import org.apache.spark.sql.expressions.Window
     // the static b side is scanned in every ring-expansion round — persist it.
@@ -705,25 +715,22 @@ object SpatialJoins {
     // binding) reads the b side exchange-FREE — without this each round
     // re-replicated AND re-shuffled the full static corpus (the dominant
     // per-round cost at scale; the a-side `remaining` shrinks geometrically).
-    // `reuseBRep = false` restores the per-round rebuild for A/B evidence
-    // (Tune `knn` mode reports shuffle bytes both ways). Only the CURRENT
-    // scheme's replica is kept: r doubles monotonically, so once the
-    // ring-driven maxN cap binds, every later round's scheme is new and a
-    // changed scheme can never recur — caching them all would accumulate a
-    // dead full-corpus replica per tail round (48-round worst case).
+    // Only the CURRENT scheme's replica is kept: r doubles monotonically, so
+    // once the ring-driven maxN cap binds, every later round's scheme is new
+    // and a changed scheme can never recur — caching them all would
+    // accumulate a dead full-corpus replica per tail round (48-round worst
+    // case).
     var bRepScheme: CellScheme = null
     var bRepCached: DataFrame = null
-    def bRep(s: CellScheme): DataFrame =
-      if (!reuseBRep) bReplicated(bCached, s)
-      else {
-        if (s != bRepScheme) {
-          if (bRepCached != null) bRepCached.unpersist(blocking = false)
-          bRepScheme = s
-          bRepCached = bReplicated(bCached, s).repartition(col("b_cell"))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        }
-        bRepCached
+    def bRep(s: CellScheme): DataFrame = {
+      if (s != bRepScheme) {
+        if (bRepCached != null) bRepCached.unpersist(blocking = false)
+        bRepScheme = s
+        bRepCached = bReplicated(bCached, s).repartition(col("b_cell"))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       }
+      bRepCached
+    }
     // counting the persisted side is one cheap action and primes the cache —
     // callers should NOT pre-count with a second scan of the source
     val bCount = if (bCountHint >= 0) bCountHint else bCached.count()

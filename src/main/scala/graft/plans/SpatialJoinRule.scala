@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.cells.{CellKeys, CellOf, CellScheme}
-import graft.functions.STIntersects
+import graft.functions.{SimHash64, STContains, STDWithin, STIntersects, STWithin}
 import graft.geom.Extent
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
@@ -178,21 +178,22 @@ object SpatialJoinRule extends Rule[LogicalPlan] with PredicateHelper {
 }
 
 /** Installs the graft SQL surface on an existing session (idempotent):
-  * `st_intersects` + the spatial-join rewrite rule. Also usable through
+  * the SQL functions + the spatial-join rewrite rule. Also usable through
   * `SparkSessionExtensions` at session build time via [[GraftExtensions]].
   */
 object GraftSql {
+  /** The SQL functions of the surface: name, implementing class, builder. */
+  private[plans] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("st_intersects", classOf[STIntersects], STIntersects(_)),
+    ("st_within", classOf[STWithin], STWithin(_)),
+    ("st_contains", classOf[STContains], STContains(_)),
+    ("st_dwithin", classOf[STDWithin], STDWithin(_)),
+    ("simhash64", classOf[SimHash64], exprs => SimHash64(exprs.head)))
+
   def install(spark: SparkSession): SparkSession = {
-    org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-      spark, "st_intersects", exprs => STIntersects(exprs))
-    org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-      spark, "st_within", exprs => graft.functions.STWithin(exprs))
-    org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-      spark, "st_contains", exprs => graft.functions.STContains(exprs))
-    org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-      spark, "st_dwithin", exprs => graft.functions.STDWithin(exprs))
-    org.apache.spark.sql.graftbridge.Bridge.registerFunction(
-      spark, "simhash64", exprs => graft.functions.SimHash64(exprs.head))
+    functions.foreach { case (name, _, builder) =>
+      org.apache.spark.sql.graftbridge.Bridge.registerFunction(spark, name, builder)
+    }
     val extra = spark.experimental.extraOptimizations
     if (!extra.contains(SpatialJoinRule))
       spark.experimental.extraOptimizations = extra :+ SpatialJoinRule
@@ -207,25 +208,9 @@ object GraftSql {
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => SpatialJoinRule)
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("st_intersects"),
-      new ExpressionInfo(classOf[STIntersects].getName, "st_intersects"),
-      (exprs: Seq[Expression]) => STIntersects(exprs)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("st_within"),
-      new ExpressionInfo(classOf[graft.functions.STWithin].getName, "st_within"),
-      (exprs: Seq[Expression]) => graft.functions.STWithin(exprs)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("st_contains"),
-      new ExpressionInfo(classOf[graft.functions.STContains].getName, "st_contains"),
-      (exprs: Seq[Expression]) => graft.functions.STContains(exprs)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("st_dwithin"),
-      new ExpressionInfo(classOf[graft.functions.STDWithin].getName, "st_dwithin"),
-      (exprs: Seq[Expression]) => graft.functions.STDWithin(exprs)))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[graft.functions.SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => graft.functions.SimHash64(exprs.head)))
+    GraftSql.functions.foreach { case (name, cls, builder) =>
+      e.injectFunction((new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
   }
 }

@@ -36,15 +36,9 @@ object PagesStream {
     */
   def geoJoinStream(pages: DataFrame, rects: Dataset[Geom], s: CellScheme): DataFrame = {
     val (x, y) = graft.pipeline.Pages.geocode(col("doc_id"))
-    val skeleton = pages.select(col("doc_id").as("a_id"), col("url"),
-        md5(col("text")).as("text_md5"), x.as("a_x"), y.as("a_y"),
-        SpatialJoins.cellOfCol(s, x, y).as("cell"))
-    val bC = SpatialJoins.withCells(
-        rects.toDF("b_id", "b_xmin", "b_xmax", "b_ymin", "b_ymax"), s, "b")
-      .withColumnRenamed("cell", "b_cell")
-    skeleton.join(bC, col("cell") === col("b_cell") &&
-        col("a_x") >= col("b_xmin") && col("a_x") <= col("b_xmax") &&
-        col("a_y") >= col("b_ymin") && col("a_y") <= col("b_ymax"))
+    val skeleton = pages.select(Seq(col("doc_id").as("a_id"), col("url"),
+      md5(col("text")).as("text_md5")) ++ SpatialJoins.pointCols(s, x, y): _*)
+    SpatialJoins.pointCandidates(skeleton, rects, s)
       .select(col("a_id"), col("b_id"), col("url"), col("text_md5"))
   }
 }

@@ -14,9 +14,10 @@ import org.scalatest.time.SpanSugar._
   * stripe, tile, split and subcell edges, extent-spanning rows and points, a
   * cell dense enough for the STR-indexed local join (≥ 512 rows per side),
   * and empty or one-sided inputs. Each route runs under a time limit, so a
-  * hang fails instead of stalling the suite. NaN coordinates are left out:
-  * the declarative plans order NaN as the largest value and the local joins
-  * compare it by IEEE rules, and no rule for them is settled yet.
+  * hang fails instead of stalling the suite. NaN coordinates are left out
+  * of the pair-set checks: the declarative plans order NaN as the largest
+  * value and the local joins compare it by IEEE rules, and no rule for them
+  * is settled yet. They appear only where the grid's extent is checked.
   */
 class HostileJoinSpec extends AnyFunSuite with TimeLimits {
   import SpatialJoins._
@@ -175,6 +176,32 @@ class HostileJoinSpec extends AnyFunSuite with TimeLimits {
         case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
       }
     assert(generators.size == 1, "intersectJoin must take its PIP route")
+  }
+
+  /** The extents of every grid in `df`'s `cell_keys`/`cell_of` expressions. */
+  private def gridBoxes(df: DataFrame): Set[String] =
+    "(?:cell_keys|cell_of)\\(grid \\d+x\\d+ (\\[[^\\]]*\\]x\\[[^\\]]*\\])".r
+      .findAllMatchIn(df.queryExecution.optimizedPlan.toString).map(_.group(1)).toSet
+
+  test("±Inf and NaN coordinates do not size intersectJoin's grid") {
+    val rnd = new scala.util.Random(13)
+    def box(n: Int, idBase: Long): Seq[Geom] = (0 until n).map { i =>
+      val x = rnd.nextDouble() * 95; val y = rnd.nextDouble() * 95
+      Geom(idBase + i, x, x + rnd.nextDouble() * 5, y, y + rnd.nextDouble() * 5)
+    } ++ Seq(Geom(idBase + n, 0, 1, 0, 1), Geom(idBase + n + 1, 99, 100, 99, 100))
+    val inf = Double.PositiveInfinity
+    val a = ds(box(600, 0L) :+ Geom(20000, -inf, 3, 4, 5))
+    val b = ds(box(600, 10000L) :+ Geom(20001, 6, inf, 7, inf))
+    val nan = ds(box(600, 10000L) :+ Geom(20002, 10, Double.NaN, 10, Double.NaN))
+    assert(gridBoxes(intersectJoin(a, b, broadcastThreshold = 10)) == Set("[0,100]x[0,100]"))
+    assert(gridBoxes(intersectJoin(a, nan, broadcastThreshold = 10)) == Set("[0,100]x[0,100]"))
+    assert(check("±Inf rows", a, b,
+      Seq("intersectJoin" -> (() => intersectJoin(a, b, broadcastThreshold = 10)))).nonEmpty)
+    // no finite bound on either axis: a unit extent, not a broadcast
+    val far = ds((0 until 20).map(i => Geom(i, -inf, if (i % 2 == 0) inf else -inf, -inf, inf)))
+    assert(gridBoxes(intersectJoin(far, far, broadcastThreshold = 10)) == Set("[0,1]x[0,1]"))
+    assert(check("rows with no finite coordinate", far, far,
+      Seq("intersectJoin" -> (() => intersectJoin(far, far, broadcastThreshold = 10)))).nonEmpty)
   }
 
   test("empty and one-sided inputs: every route is empty") {
